@@ -10,24 +10,21 @@ import org.apache.spark.sql.graftshim.GraftBridge
   *
   * FOLD FORM (r15, the Scc-coloring discipline brought to BFS): the state
   * is ONE (node, dist) frame over the vertex set, dist NULL until
-  * discovered, kept HASH-PARTITIONED AND SORTED on the fold key and
-  * re-checkpointed once per round — LogicalRDD preserves
-  * outputPartitioning/outputOrdering through localCheckpoint, so the
-  * per-round fold (a left join of the pushed frontier minima into the
-  * state) is an SMJ that scans the state IN PLACE and shuffles only the
-  * frontier-sized delta. min over predecessors is monotone and
-  * label-correcting: a node's first push arrives exactly at its true hop
-  * distance (its dist-(d-1) predecessor entered the changed set the
-  * half-step before), so labels are set once and never revised.
+  * discovered, re-checkpointed once per double-step; each hop folds the
+  * pushed frontier minima into it with one left join. The seed frame is
+  * built hash-partitioned and sorted on the fold key, but that layout does
+  * not survive the checkpoint (with AQE on, the checkpointed frame reports
+  * UnknownPartitioning(0); see GraftBridge.localCheckpointCount), so the
+  * fold join re-exchanges the state on every hop. min over predecessors is
+  * monotone and label-correcting: a node's first push arrives exactly at
+  * its true hop distance (its dist-(d-1) predecessor entered the changed
+  * set the half-step before), so labels are set once and never revised.
   *
   * This replaces the r14/early-r15 frontier+anti-join form, which paid per
   * round: two hop-distinct shuffles, two anti-joins, THREE checkpoints and
-  * a full repartition+sort rebuild of the visited set (an O(V) shuffle per
-  * round). The fold form pays ONE checkpoint + one count per double-step
-  * and re-shuffles nothing but the frontier's out-edges: the same rounds,
-  * ~half the jobs, and zero state-set shuffle volume. At 100 TB the state
-  * rewrite is a partition-local columnar copy; the removed visited shuffle
-  * scaled with |V|·rounds.
+  * a full repartition+sort rebuild of the visited set. The fold form pays
+  * ONE checkpoint + one count per double-step: the same rounds and about
+  * half the jobs.
   *
   * DOUBLE-STEPPED like both Scc fixpoints (measured finding there: on
   * diameter-many metadata-scale shuffles the per-round fixed overhead —

@@ -212,13 +212,12 @@ object Scc {
         // ---- 3. backward mark fixpoint within color classes — FOLD form
         // (r15, the coloring loop's discipline): the state is ONE
         // (node, color, m) frame over the remaining nodes, m = reaches-
-        // pivot flag, kept hash-partitioned + sorted on `node` and
-        // re-checkpointed once per double-step; the per-round fold (left
-        // join of the pushed predecessor set) is an SMJ that scans the
-        // state IN PLACE. This replaces the frontier+anti-join form,
-        // which paid a full repartition+sort rebuild of the marked set
-        // (an O(marked) shuffle) plus an extra checkpoint every round.
-        // Per-round shuffle volume is the frontier's in-edges only.
+        // pivot flag, re-checkpointed once per double-step; the per-round
+        // fold is a left join of the pushed predecessor set, which
+        // re-exchanges the state (the checkpoint keeps no partitioning, see
+        // GraftBridge.localCheckpointCount). This replaces the
+        // frontier+anti-join form, which also paid a sort rebuild of the
+        // marked set plus an extra checkpoint every round.
         // INTRA-CLASS edges are annotated ONCE per phase (r15): the
         // backward walk only ever crosses edges whose endpoints share a
         // color, and for such an edge the class label IS the edge's

@@ -44,10 +44,10 @@ object TextRank {
     val e = edges.join(wsum, Seq("src"))
       .select(col("src"), col("dst"), col("w"), col("wsum"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // node set materialized ONCE, pre-partitioned + sorted on the fold key
-    // (r16, the Bfs/Scc state-frame discipline): every round's fold join
-    // re-executed the distinct and re-exchanged the node set; LogicalRDD
-    // preserves the layout so each round's left join SMJ-scans it in place
+    // node set materialized ONCE (r16): every round's fold join
+    // re-executed the distinct. The checkpoint keeps no partitioning under
+    // AQE (see GraftBridge.localCheckpointCount), so each round's left join
+    // still re-exchanges it
     val nodes = e.select(col("src").as("word")).distinct()
       .repartition(col("word")).sortWithinPartitions("word")
       .localCheckpoint(true)

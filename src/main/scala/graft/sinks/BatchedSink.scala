@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Size-capped batched sink — the Spark re-expression of reader's
@@ -41,19 +41,22 @@ object BatchedSink {
       df: DataFrame,
       pkCol: String,
       batchKeySpan: Long,
-      outDir: String,
-      numWriteTasks: Int = 64): DataFrame = {
+      outDir: String): DataFrame = {
     val batched = withBatchId(df, pkCol, batchKeySpan)
     // Cluster rows by batch before the partitioned write: every batch then
     // lands as ONE file written by one task, instead of every task opening
     // a file in every batch directory (tasks x batches small files — the
-    // classic dynamic-partition-write storm). The explicit task count keeps
-    // AQE from coalescing the exchange down to one writer that would open
-    // every batch file serially. partitionOverwriteMode=dynamic scopes the
-    // overwrite to the batch directories actually present in `df`, so
-    // republishing a subset of batches cannot wipe the others.
+    // classic dynamic-partition-write storm). The exchange takes the
+    // session's spark.sql.shuffle.partitions, and AQE coalesces small hash
+    // partitions into fewer writer tasks; it merges whole partitions and
+    // never splits one, so a batch still lands as one file. Not
+    // `rebalance`: AQE may split a skewed rebalance partition across tasks,
+    // which would land one batch as several files.
+    // partitionOverwriteMode=dynamic scopes the overwrite to the batch
+    // directories actually present in `df`, so republishing a subset of
+    // batches cannot wipe the others.
     batched
-      .repartition(numWriteTasks, col("batch_id"))
+      .repartition(col("batch_id"))
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

@@ -23,9 +23,13 @@ object GraftBridge {
     * action that both materializes the cached blocks and aggregates
     * (row count, true-count of `boolCol` if given), then rebuild the
     * DataFrame through `LogicalRDD.fromDataset` — the same constructor
-    * `Dataset.checkpoint` uses, so outputPartitioning / outputOrdering are
-    * preserved exactly as the public API preserves them (the property the
-    * graph operators' pre-partitioned state frames rely on).
+    * `Dataset.checkpoint` uses. That constructor copies the executed plan's
+    * outputPartitioning / outputOrdering, but with AQE on the executed plan
+    * is the `AdaptiveSparkPlanExec` wrapper, which reports neither: the
+    * checkpointed frame scans as `Scan ExistingRDD … UnknownPartitioning(0)`,
+    * exactly as after the public `localCheckpoint`, and a join keyed on it
+    * re-exchanges it. A layout built before the checkpoint does not survive
+    * it.
     *
     * Returns (checkpointed df, row count, rows with boolCol = true —
     * 0 when boolCol is None). */
