@@ -185,6 +185,23 @@ object SparkEntry {
           .otherwise((col("r3") - col("phi21") * col("r2")
             - col("phi22") * col("r1")) / col("den3")))
 
+  /** The 'scc-' hash digraph shared by the graph lanes: (node) over the
+    * customer keys, and (src, dst) with two hashed out-edges per node not
+    * ≡ 0 mod 7, self-loops dropped. A target is drawn from [0, n), so it
+    * may be a phantom id outside the node set. */
+  private def hashDigraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
+    val stats = cust.agg(count(lit(1)).as("n"))
+    val edges = cust.crossJoin(broadcast(stats))
+      .where(col("node") % 7 =!= 0)
+      .select(col("node").as("src"), explode(array(
+        pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
+        pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
+        .as("dst"))
+      .where(col("src") =!= col("dst"))
+    (cust, edges)
+  }
+
   private def workDir(kind: String, sfDir: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
@@ -3869,15 +3886,8 @@ object SparkEntry {
       // enumerates the SAME semantics by a (node, cost, hops≤8) walk
       // CTE + MIN — algorithm-vs-definition, the graph_scc convention.
       // Output is the cost-census (distance, node count).
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val edges = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
+      val (cust, digraph) = hashDigraph(s, dir)
+      val edges = digraph
         .withColumn("w", pmod(Tf.hash60(concat(lit("w-"), col("src").cast("string"),
           lit("-"), col("dst").cast("string"))), lit(9L)) + lit(1L))
         .localCheckpoint()
@@ -7459,15 +7469,7 @@ object SparkEntry {
       // algorithm-vs-definition proof. SccSpec pins the operator against
       // a driver-side Tarjan on five graph shapes.
       import graft.operators.Scc
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val edges = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
+      val (cust, edges) = hashDigraph(s, dir)
       Scc.components(cust, edges)
         .groupBy("scc_id").agg(count(lit(1)).as("n_members"))
         .orderBy("scc_id")
@@ -7756,16 +7758,8 @@ object SparkEntry {
       // is ONE IEEE division of small exact ints; is_edge flags pairs
       // already connected (left join against the edge set). Top-20 by
       // (jaccard desc, u, v) plans as TakeOrderedAndProject.
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val raw = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
-        .join(cust.select(col("node").as("dst")), Seq("dst"), "left_semi")
+      val (cust, digraph) = hashDigraph(s, dir)
+      val raw = digraph.join(cust.select(col("node").as("dst")), Seq("dst"), "left_semi")
       val adj = raw.select(col("src").as("a"), col("dst").as("b"))
         .union(raw.select(col("dst").as("a"), col("src").as("b")))
         .distinct()
@@ -7801,16 +7795,8 @@ object SparkEntry {
       // CENTER before the self-join, so the weight arrives with the
       // wedge and the pair agg is one keyed SUM — same bounded
       // Σdeg(w)² candidate generation as the Jaccard lane.
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val raw = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
-        .join(cust.select(col("node").as("dst")), Seq("dst"), "left_semi")
+      val (cust, digraph) = hashDigraph(s, dir)
+      val raw = digraph.join(cust.select(col("node").as("dst")), Seq("dst"), "left_semi")
       val adj = raw.select(col("src").as("a"), col("dst").as("b"))
         .union(raw.select(col("dst").as("a"), col("src").as("b")))
         .distinct()
@@ -8173,15 +8159,7 @@ object SparkEntry {
       // match proves the frontier labels, including the two-hop-delta
       // correctness argument in the scaladoc.
       import graft.operators.Bfs
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val edges = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
+      val (cust, edges) = hashDigraph(s, dir)
       Bfs.distances(cust, edges, source = 1L, maxIters = BfsHopCap / 2)
         .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
         .orderBy("dist")
@@ -8203,15 +8181,7 @@ object SparkEntry {
       // CTE with MIN(d) — algorithm vs definition, the graph_bfs
       // convention.
       import graft.operators.Bfs
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val edges = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
+      val (cust, edges) = hashDigraph(s, dir)
       Bfs.distancesMulti(cust, edges, Seq(1L, 2L, 3L, 5L), maxIters = BfsHopCap / 2)
         .groupBy("node").agg(count(lit(1)).as("n_src"), sum("dist").as("sum_dist"))
         .orderBy(col("n_src").desc, col("sum_dist"), col("node")).limit(20)
@@ -8238,15 +8208,7 @@ object SparkEntry {
       // one δ CTE per level) — algorithm vs definition, the graph-lane
       // convention.
       import graft.operators.Betweenness
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val edges = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
+      val (cust, edges) = hashDigraph(s, dir)
       val acc = Betweenness.sampled(cust, edges, Seq(1L, 2L, 3L, 5L),
         maxHop = BetweennessHopCap)
       acc.groupBy("node").agg(
@@ -8273,15 +8235,7 @@ object SparkEntry {
       // per-source frame (the graph-lane scalar shape). Oracle re-walks
       // by recursive CTE + MIN(d) — algorithm vs definition.
       import graft.operators.Bfs
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val edges = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
+      val (cust, edges) = hashDigraph(s, dir)
       val per = Bfs.distancesMulti(cust, edges, Seq(1L, 2L, 3L, 5L),
           maxIters = BfsHopCap / 2)
         .groupBy("s").agg(count(lit(1)).as("n_reached"), max("dist").as("ecc"))
@@ -8301,15 +8255,7 @@ object SparkEntry {
       // casts, two sqrts, one multiply, one divide) that hash-replays.
       // Degree annotation = two keyed counts + two equi-joins; nothing
       // non-keyed touches the edge list.
-      val cust = Tables.customer(s, dir).select(col("c_custkey").cast("long").as("node"))
-      val stats = cust.agg(count(lit(1)).as("n"))
-      val edges = cust.crossJoin(broadcast(stats))
-        .where(col("node") % 7 =!= 0)
-        .select(col("node").as("src"), explode(array(
-          pmod(Tf.hash60(concat(lit("scc-a-"), col("node").cast("string"))), col("n")),
-          pmod(Tf.hash60(concat(lit("scc-b-"), col("node").cast("string"))), col("n"))))
-          .as("dst"))
-        .where(col("src") =!= col("dst"))
+      val (_, edges) = hashDigraph(s, dir)
       val outd = edges.groupBy("src").agg(count(lit(1)).as("xd"))
       val ind = edges.groupBy("dst").agg(count(lit(1)).as("yd"))
       edges.join(outd, "src").join(ind, "dst")

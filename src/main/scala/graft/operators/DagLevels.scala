@@ -2,26 +2,22 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftBridge
 
 /** Longest-path levels over a DAG — the second half of graph
   * condensation: contract SCCs (Scc.components), then rank the condensed
   * DAG by critical-path depth (level(v) = length of the longest path from
   * any source to v). Longest path is NP-hard on general graphs but linear
   * on DAGs; the distributed form is Bellman-Ford-style max-relaxation to
-  * fixpoint, DOUBLE-STEPPED like the Scc fixpoints and — r15 —
-  * DELTA-PROPAGATED with the state frame kept hash-partitioned + sorted
-  * on the fold key (the Scc-coloring discipline): max-relaxation is
-  * monotone and idempotent, so a node's outgoing contribution needs
-  * re-pushing only in the round after its level changed. Each round
-  * pushes only the changed set's levels one hop (twice) and folds them
-  * into the level frame with a left join — an SMJ that scans the state in
-  * place (LogicalRDD preserves partitioning/ordering through
-  * localCheckpoint), where the previous full-frame relax re-joined and
-  * re-shuffled ALL nodes' levels every round. Convergence in ⌈depth/2⌉
-  * rounds; a CYCLE would diverge — the maxIters guard turns that into a
-  * loud failure rather than an infinite loop, which is the correct
-  * behavior for an operator whose contract is acyclic input. */
+  * fixpoint through the shared double-stepped delta fold
+  * (Fixpoint.deltaFold): max-relaxation is monotone and idempotent, so a
+  * node's outgoing contribution needs re-pushing only in the round after
+  * its level changed. Each round pushes only the changed set's levels one
+  * hop (twice) and folds them into the level frame with a left join,
+  * which re-exchanges the state (the checkpoint keeps no partitioning
+  * under AQE; see GraftBridge.localCheckpointCount). Convergence in
+  * ⌈depth/2⌉ rounds; a CYCLE would diverge — the maxIters guard turns
+  * that into a loud failure rather than an infinite loop, which is the
+  * correct behavior for an operator whose contract is acyclic input. */
 object DagLevels {
 
   /** @param nodes (node: long) — DAG vertex set
@@ -41,29 +37,9 @@ object DagLevels {
           greatest(col("level"), coalesce(col("plvl"), col("level"))).as("level"),
           (coalesce(col("plvl"), col("level")) > col("level")).as("chg"))
     }
-    // fused materialize+count (r16): the convergence count rides the
-    // materialization job instead of a second whole-frame job per round
-    // (see GraftBridge.localCheckpointCount)
-    val (l0, n0, _) = GraftBridge.localCheckpointCount(
-      nodes.select(col("node"), lit(0L).as("level"))
-        .repartition(col("node")).sortWithinPartitions("node"))
-    var lvl = l0
-    var changed = l0
-    var changedCount = n0
-    var iter = 0
-    while (changedCount > 0) {
-      val f1 = relax(lvl.select("node", "level"), changed.select("node", "level"))
-      val (f2, _, nChg) = GraftBridge.localCheckpointCount(
-        relax(f1.select("node", "level"),
-          f1.where(col("chg")).select("node", "level")),
-        Some("chg"))
-      lvl = f2.select("node", "level")
-      changed = f2.where(col("chg")).select("node", "level")
-      changedCount = nChg
-      iter += 1
-      require(iter < maxIters,
-        s"DAG level relaxation did not converge in $maxIters rounds — cyclic input?")
-    }
-    lvl
+    Fixpoint.deltaFold(
+        nodes.select(col("node"), lit(0L).as("level"), lit(true).as("chg")),
+        Seq("node", "level"), maxIters,
+        s"DAG level relaxation did not converge in $maxIters rounds — cyclic input?")(relax)
   }
 }

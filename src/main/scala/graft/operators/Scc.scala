@@ -67,7 +67,8 @@ object Scc {
     // so each loop round paid a SECOND whole-frame job just to learn its
     // convergence signal — GraftBridge.localCheckpointCount returns the
     // counts from the materialization job itself (one job per round
-    // instead of two; partitioning/ordering preserved identically).
+    // instead of two). Neither form keeps a layout built before the
+    // checkpoint: under AQE the checkpointed frame reports no partitioning.
     val (rem0, remCount0, _) =
       GraftBridge.localCheckpointCount(nodes.select(col("node")).distinct())
     var remaining = rem0
@@ -83,15 +84,10 @@ object Scc {
       // total trim shuffle volume is O(E) across ALL rounds instead of
       // the previous O(E × rounds) (two full-edge distincts plus two
       // full-edge semi-join re-checkpoints per round). The edge table is
-      // physically trimmed ONCE, after the fixpoint. Both edge
-      // orientations are pre-partitioned + sorted and the degree frame
-      // stays hash-partitioned on node (LogicalRDD preserves both
-      // through localCheckpoint), so per-round shuffles carry only the
-      // peeled delta and its adjacent edges.
-      val esBySrc = es.repartition(col("src")).sortWithinPartitions("src")
-        .localCheckpoint(true)
-      val esByDst = es.repartition(col("dst")).sortWithinPartitions("dst")
-        .localCheckpoint(true)
+      // physically trimmed ONCE, after the fixpoint. The per-round
+      // shuffles re-exchange the degree frame and the edges (no layout
+      // survives a checkpoint, so none is built before one), but the
+      // delta joins carry only the peeled nodes and their adjacent edges.
       var degrees = remaining
         .join(es.groupBy(col("src").as("node")).agg(count(lit(1)).as("outd")),
           Seq("node"), "left")
@@ -99,7 +95,6 @@ object Scc {
           Seq("node"), "left")
         .select(col("node"), coalesce(col("outd"), lit(0L)).as("outd"),
           coalesce(col("ind"), lit(0L)).as("ind"))
-        .repartition(col("node")).sortWithinPartitions("node")
         .localCheckpoint(true)
       // one delta-peel: drop `peeled` from `deg` and decrement its
       // neighbors' degrees. An edge decrements src's out-degree when its
@@ -107,10 +102,10 @@ object Scc {
       // edge fires each direction at most once, since a node peels once.
       // A no-peel input is a no-op (empty anti-join, zero decrements).
       def applyPeel(deg: DataFrame, peeled: DataFrame): DataFrame = {
-        val decOut = esByDst
+        val decOut = es
           .join(peeled.select(col("node").as("dst")), Seq("dst"), "left_semi")
           .groupBy(col("src").as("node")).agg(count(lit(1)).as("dout"))
-        val decIn = esBySrc
+        val decIn = es
           .join(peeled.select(col("node").as("src")), Seq("src"), "left_semi")
           .groupBy(col("dst").as("node")).agg(count(lit(1)).as("din"))
         deg
@@ -140,9 +135,7 @@ object Scc {
         val p1 = peelable(degrees)
         val d1 = applyPeel(degrees, p1)
         val p2 = peelable(d1)
-        val (d2, c, _) = GraftBridge.localCheckpointCount(
-          applyPeel(d1, p2)
-            .repartition(col("node")).sortWithinPartitions("node"))
+        val (d2, c, _) = GraftBridge.localCheckpointCount(applyPeel(d1, p2))
         degrees = d2
         shrunk = c != degCount
         degCount = c
@@ -158,29 +151,19 @@ object Scc {
           .join(remaining.select(col("node").as("src")), Seq("src"), "left_semi")
           .join(remaining.select(col("node").as("dst")), Seq("dst"), "left_semi")
           .localCheckpoint(true)
-      }
-      if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-        System.err.println(s"[scc] phase ${phase + 1}: trim $titer rounds, remaining=$remainingCount at ${System.nanoTime() / 1000000}ms")
-      if (remainingCount > 0) {
-        // ---- 2. forward max-color fixpoint (propagate along edges).
-        // DELTA-PROPAGATED (r15) and still DOUBLE-STEPPED: max is
-        // monotone and idempotent, so a node's outgoing contribution
-        // needs re-pushing only in the round AFTER its color changed —
-        // each round pushes only the changed set's colors one hop (twice)
-        // and folds them into the full color frame with a left join. The
-        // trimmed edge table is pre-partitioned + sorted on src and the
-        // color frame stays hash-partitioned + sorted on node (preserved
-        // through localCheckpoint), so the per-round shuffle volume is
-        // the changed delta and its out-edges, not O(V + E) as the
-        // previous full-frame push paid; the fold's SMJ scans colors in
-        // place. Convergence: two-step rounds where step 2 changes
-        // nothing are a true fixpoint (step 1's changes are in the folded
-        // frame and their push produced no further change).
-        val esCBySrc = es.repartition(col("src")).sortWithinPartitions("src")
-          .localCheckpoint(true)
+        // ---- 2. forward max-color fixpoint (propagate along edges),
+        // through the shared double-stepped delta fold
+        // (Fixpoint.deltaFold): max is monotone and idempotent, so a
+        // node's outgoing contribution needs re-pushing only in the round
+        // AFTER its color changed — each step pushes only the changed
+        // set's colors one hop along the trimmed edges and folds them
+        // into the full color frame with a left join, so the per-round
+        // shuffle volume is the changed delta and its out-edges plus the
+        // color frame's re-exchange, not the O(V + E) full-frame push.
+
         // one delta step: (full colors, changed) -> folded (node, color, chg)
         def deltaStep(c: DataFrame, ch: DataFrame): DataFrame = {
-          val pushed = esCBySrc
+          val pushed = es
             .join(ch.select(col("node").as("src"), col("color").as("pc")), Seq("src"))
             .groupBy(col("dst").as("node")).agg(max("pc").as("pc"))
           c.join(pushed, Seq("node"), "left")
@@ -188,49 +171,25 @@ object Scc {
               greatest(col("color"), coalesce(col("pc"), col("color"))).as("color"),
               (coalesce(col("pc"), col("color")) > col("color")).as("chg"))
         }
-        var colors = remaining.select(col("node"), col("node").as("color"))
-          .repartition(col("node")).sortWithinPartitions("node")
-          .localCheckpoint(true)
-        var changed = colors
-        var changedCount = remainingCount
-        var citer = 0
-        while (changedCount > 0) {
-          val f1 = deltaStep(colors, changed)
-          val (f2, _, nChg) = GraftBridge.localCheckpointCount(
-            deltaStep(
-              f1.select(col("node"), col("color")),
-              f1.where(col("chg")).select(col("node"), col("color"))),
-            Some("chg"))
-          colors = f2.select("node", "color")
-          changed = f2.where(col("chg")).select(col("node"), col("color"))
-          changedCount = nChg
-          citer += 1
-          require(citer < maxIters, s"coloring did not converge in $maxIters rounds")
-        }
-        if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc] phase ${phase + 1}: coloring $citer rounds on $remainingCount nodes at ${System.nanoTime() / 1000000}ms")
-        // ---- 3. backward mark fixpoint within color classes — FOLD form
-        // (r15, the coloring loop's discipline): the state is ONE
-        // (node, color, m) frame over the remaining nodes, m = reaches-
-        // pivot flag, re-checkpointed once per double-step; the per-round
-        // fold is a left join of the pushed predecessor set, which
-        // re-exchanges the state (the checkpoint keeps no partitioning, see
-        // GraftBridge.localCheckpointCount). This replaces the
-        // frontier+anti-join form, which also paid a sort rebuild of the
-        // marked set plus an extra checkpoint every round.
+        val colors = Fixpoint.deltaFold(
+            remaining.select(col("node"), col("node").as("color"), lit(true).as("chg")),
+            Seq("node", "color"), maxIters,
+            s"coloring did not converge in $maxIters rounds")(deltaStep)
+        // ---- 3. backward mark fixpoint within color classes, the same
+        // delta fold: the state is ONE (node, color, m) frame over the
+        // remaining nodes, m = reaches-pivot flag, seeded at the pivots
+        // (node == color).
         // INTRA-CLASS edges are annotated ONCE per phase (r15): the
         // backward walk only ever crosses edges whose endpoints share a
         // color, and for such an edge the class label IS the edge's
-        // color — so each hop is one semi-join into the pre-partitioned
-        // intra-class edge table, with NO per-hop colors join at all
-        // (the previous form joined the full color frame every hop).
+        // color — so each hop is one semi-join into the intra-class edge
+        // table, with NO per-hop colors join at all.
         val esIntra = {
           val cs = colors.select(col("node").as("src"), col("color").as("scolor"))
           val cd = colors.select(col("node").as("dst"), col("color").as("dcolor"))
           es.join(cs, Seq("src")).join(cd, Seq("dst"))
             .where(col("scolor") === col("dcolor"))
             .select(col("src"), col("dst"))
-            .repartition(col("dst")).sortWithinPartitions("dst")
             .localCheckpoint(true)
         }
         // one backward step: fold the in-class predecessors of the changed
@@ -245,31 +204,12 @@ object Scc {
               (col("m") || col("p").isNotNull).as("m"),
               (!col("m") && col("p").isNotNull).as("chg"))
         }
-        // seed: pivots (node == color); colors is already partitioned +
-        // sorted on node, so the projection keeps that layout
-        val (mk0, _, nSeed) = GraftBridge.localCheckpointCount(
-          colors.select(col("node"), col("color"),
-            (col("node") === col("color")).as("m")),
-          Some("m"))
-        var mk = mk0
-        var mchanged = mk.where(col("m")).select("node")
-        var mchangedCount = nSeed
-        var miter = 0
-        while (mchangedCount > 0) {
-          val b1 = backStep(mk.select("node", "color", "m"), mchanged)
-          val (b2, _, nChg) = GraftBridge.localCheckpointCount(
-            backStep(b1.select("node", "color", "m"),
-              b1.where(col("chg")).select("node")),
-            Some("chg"))
-          mk = b2.select("node", "color", "m")
-          mchanged = b2.where(col("chg")).select("node")
-          mchangedCount = nChg
-          miter += 1
-          require(miter < maxIters, s"backward mark did not converge in $maxIters rounds")
-        }
-        val marked = mk.where(col("m")).select(col("node"), col("color"))
-        if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc] phase ${phase + 1}: backward $miter rounds at ${System.nanoTime() / 1000000}ms")
+        val pivot = col("node") === col("color")
+        val marked = Fixpoint.deltaFold(
+            colors.select(col("node"), col("color"), pivot.as("m"), pivot.as("chg")),
+            Seq("node", "color", "m"), maxIters,
+            s"backward mark did not converge in $maxIters rounds")(backStep)
+          .where(col("m")).select(col("node"), col("color"))
         done += marked.select(col("node"), col("color").as("pivot")).localCheckpoint(true)
         val (rem2, remC, _) = GraftBridge.localCheckpointCount(
           remaining.join(marked.select("node"), Seq("node"), "left_anti"))
@@ -281,8 +221,6 @@ object Scc {
           .localCheckpoint(true)
       }
       phase += 1
-      if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-        System.err.println(s"[scc] phase $phase done: remaining=$remainingCount")
     }
     require(remainingCount <= localFinishBelow,
       s"SCC did not finish in $maxPhases phases — $remainingCount nodes left")

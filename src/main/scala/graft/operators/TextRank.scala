@@ -47,10 +47,8 @@ object TextRank {
     // node set materialized ONCE (r16): every round's fold join
     // re-executed the distinct. The checkpoint keeps no partitioning under
     // AQE (see GraftBridge.localCheckpointCount), so each round's left join
-    // still re-exchanges it
-    val nodes = e.select(col("src").as("word")).distinct()
-      .repartition(col("word")).sortWithinPartitions("word")
-      .localCheckpoint(true)
+    // still re-exchanges it, and no layout is built before the checkpoint
+    val nodes = e.select(col("src").as("word")).distinct().localCheckpoint(true)
     val base = 15L * scale / 100L
     var ranks = nodes.select(col("word"), lit(scale).as("r")).localCheckpoint(true)
     for (_ <- 1 to iterations) {

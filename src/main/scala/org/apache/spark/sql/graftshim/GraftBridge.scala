@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -36,23 +37,9 @@ object GraftBridge {
   def localCheckpointCount(
       df: DataFrame,
       boolCol: Option[String] = None): (DataFrame, Long, Long) = {
-    val ds = df.asInstanceOf[ClassicDataset[Row]]
-    val idx = boolCol.map(ds.schema.fieldIndex).getOrElse(-1)
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    // one job: materializes the local checkpoint (runJob triggers
-    // doCheckpoint on the lineage) AND folds both counts
-    val (n, nTrue) = rdd.mapPartitions { it =>
-      var a = 0L
-      var b = 0L
-      it.foreach { r =>
-        a += 1L
-        if (idx >= 0 && !r.isNullAt(idx) && r.getBoolean(idx)) b += 1L
-      }
-      Iterator.single((a, b))
-    }.fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
-    val logical = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    (ClassicDataset.ofRows(ds.sparkSession, logical), n, nTrue)
+    val idx = boolCol.map(df.schema.fieldIndex).getOrElse(-1)
+    checkpointFold(df)(
+      r => if (idx >= 0 && !r.isNullAt(idx) && r.getBoolean(idx)) 1L else 0L, _ + _)
   }
 
   /** Set-checksum variant for the star-CC fixpoint: one materialization
@@ -61,20 +48,30 @@ object GraftBridge {
     * whole-frame aggregate per round. NULLs are skipped, matching
     * `bit_xor`'s null-ignoring aggregate semantics. */
   def localCheckpointXor(df: DataFrame, longCol: String): (DataFrame, Long, Long) = {
+    val idx = df.schema.fieldIndex(longCol)
+    checkpointFold(df)(r => if (r.isNullAt(idx)) 0L else r.getLong(idx), _ ^ _)
+  }
+
+  /** The shared materialization: checkpoint `df` and, in the same job,
+    * fold (row count, `merge` of `add` over every row), with 0 as the
+    * identity of `merge`. */
+  private def checkpointFold(df: DataFrame)(
+      add: InternalRow => Long, merge: (Long, Long) => Long): (DataFrame, Long, Long) = {
     val ds = df.asInstanceOf[ClassicDataset[Row]]
-    val idx = ds.schema.fieldIndex(longCol)
     val rdd = ds.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    val (n, x) = rdd.mapPartitions { it =>
+    // one job: materializes the local checkpoint (runJob triggers
+    // doCheckpoint on the lineage) AND folds both results
+    val (n, acc) = rdd.mapPartitions { it =>
       var a = 0L
       var b = 0L
       it.foreach { r =>
         a += 1L
-        if (!r.isNullAt(idx)) b ^= r.getLong(idx)
+        b = merge(b, add(r))
       }
       Iterator.single((a, b))
-    }.fold((0L, 0L))((p, q) => (p._1 + q._1, p._2 ^ q._2))
+    }.fold((0L, 0L))((x, y) => (x._1 + y._1, merge(x._2, y._2)))
     val logical = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    (ClassicDataset.ofRows(ds.sparkSession, logical), n, x)
+    (ClassicDataset.ofRows(ds.sparkSession, logical), n, acc)
   }
 }

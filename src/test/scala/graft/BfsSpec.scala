@@ -12,8 +12,9 @@ class BfsSpec extends AnyFunSuite {
 
   private def reference(n: Int, edges: Seq[(Int, Int)], src: Int): Map[Long, Long] = {
     val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    val dist = scala.collection.mutable.Map(src -> 0L)
-    val q = scala.collection.mutable.Queue(src)
+    val dist = scala.collection.mutable.Map.empty[Int, Long]
+    val q = scala.collection.mutable.Queue.empty[Int]
+    if (src < n) { dist(src) = 0L; q.enqueue(src) }
     while (q.nonEmpty) {
       val v = q.dequeue()
       for (w <- adj.getOrElse(v, Nil) if w < n && !dist.contains(w)) {
@@ -23,12 +24,18 @@ class BfsSpec extends AnyFunSuite {
     dist.map { case (k, v) => k.toLong -> v }.toMap
   }
 
+  /** Runs both entry points; distancesMulti with one source must return
+    * the same labels as distances. */
   private def run(n: Int, edges: Seq[(Int, Int)], src: Int): Map[Long, Long] = {
     import TestSpark.spark.implicits._
     val nodesDf = (0 until n).map(_.toLong).toDF("node")
     val edgesDf = edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
-    Bfs.distances(nodesDf, edgesDf, src.toLong)
+    val single = Bfs.distances(nodesDf, edgesDf, src.toLong)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val multi = Bfs.distancesMulti(nodesDf, edgesDf, Seq(src.toLong))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(multi === single.map { case (v, d) => (src.toLong, v) -> d })
+    single
   }
 
   test("matches queue BFS on random, chain and disconnected shapes") {
@@ -43,11 +50,30 @@ class BfsSpec extends AnyFunSuite {
       // source with no out-edges: singleton result
       { val n = 10; (n, Seq((1, 2), (2, 3)), 5) },
       // disconnected component + phantom edge targets outside the node set
-      { val n = 12; (n, Seq((0, 1), (1, 2), (2, 15), (8, 9), (9, 10)), 0) })
+      { val n = 12; (n, Seq((0, 1), (1, 2), (2, 15), (8, 9), (9, 10)), 0) },
+      // one-node graph
+      (1, Nil, 0),
+      // empty node set: the source is not a node, nothing is reached
+      (0, Nil, 0))
     for (((n, edges, src) , si) <- shapes.zipWithIndex) {
       // reference drops phantom targets (w < n) exactly like the operator's
       // node-set semi-join
       assert(run(n, edges, src) === reference(n, edges, src), s"shape $si")
     }
+  }
+
+  test("a chain longer than maxIters allows fails the guard loudly") {
+    import TestSpark.spark.implicits._
+    // 11 hops need 6 double-stepped rounds; maxIters = 3 stops after 3
+    val nodesDf = (0L until 12L).toDF("node")
+    val edgesDf = (0L until 11L).map(i => (i, i + 1)).toDF("src", "dst")
+    val single = intercept[IllegalArgumentException] {
+      Bfs.distances(nodesDf, edgesDf, 0L, maxIters = 3)
+    }
+    assert(single.getMessage.contains("did not converge"))
+    val multi = intercept[IllegalArgumentException] {
+      Bfs.distancesMulti(nodesDf, edgesDf, Seq(0L, 1L), maxIters = 3)
+    }
+    assert(multi.getMessage.contains("did not converge"))
   }
 }

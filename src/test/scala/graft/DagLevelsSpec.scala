@@ -41,7 +41,11 @@ class DagLevelsSpec extends AnyFunSuite {
       // diamond with a long arm: level(sink) must take the LONG path
       (7, Seq((0, 1), (1, 6), (0, 2), (2, 3), (3, 4), (4, 5), (5, 6))),
       // isolated nodes only
-      (5, Nil))
+      (5, Nil),
+      // one-node graph
+      (1, Nil),
+      // empty node set
+      (0, Nil))
     for (((n, edges), si) <- shapes.zipWithIndex)
       assert(run(n, edges) === reference(n, edges), s"shape $si")
   }

@@ -88,7 +88,11 @@ class SccSpec extends AnyFunSuite {
       // two disjoint cycles joined by a bridge
       { val n = 12
         (n, (0 until 5).map(i => (i, (i + 1) % 5)) ++
-          (6 until 11).map(i => (i, if (i == 10) 6 else i + 1)) ++ Seq((4, 6))) })
+          (6 until 11).map(i => (i, if (i == 10) 6 else i + 1)) ++ Seq((4, 6))) },
+      // one-node graph
+      (1, Nil),
+      // empty node set
+      (0, Nil))
     for (((n, edges), si) <- shapes.zipWithIndex) {
       val adj = edges.distinct.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
       val expect = tarjan(n, adj).map { case (k, v) => k.toLong -> v.toLong }
