@@ -114,33 +114,42 @@ object EventsIngest {
     }
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` scoped to the streaming
-    * STATE partition count, restoring the session value after (guide
-    * §2.1/§2.2 partition sizing). Stateful streaming operators
+  /** Run one streaming query's start-to-finish `f` with two session keys
+    * scoped to it, restoring each after (or unsetting it, if it had no
+    * session value), also when `f` throws.
+    *
+    * `spark.sql.shuffle.partitions` is set to the STATE partition count,
+    * `SPARK_GRAFT_STREAM_STATE_PARTITIONS` or 8. Stateful operators
     * (dropDuplicates[WithinWatermark], stream-stream joins, watermarked
-    * aggregation) create one state store — and one delta + commit file per
-    * MICRO-BATCH — per shuffle partition, and the count is PINNED into the
-    * checkpoint at first start, so it must be sized to expected state
-    * volume (keys per watermark horizon), never to whatever core count the
-    * session happens to run with: state here measures kilobytes-per-key
-    * horizons, and a core-count default charges every micro-batch a full
-    * fan of near-empty state commits (measured by the r15 driver as
-    * INVERSE scaling: stream_ttl_dedup 6.9 s at 8 cores vs 13.8 s at 32 —
-    * same data, same query). foreachBatch loops get the same scope: their
-    * per-batch keyed shuffles carry one micro-batch of rows, not a
-    * battery-scale frame. `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides
-    * for production state volumes; the local default keeps the 8- and
-    * 32-core benches on the SAME state layout so the driver's core-count
-    * A/B measures compute scaling, not state-file count. */
-  private[streaming] def withStatePartitions[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+    * aggregation) keep one state store per shuffle partition, write one
+    * delta and commit file per store per micro-batch, and pin the count into
+    * the checkpoint at first start; so it is sized to state volume (keys per
+    * watermark horizon), not to the session's core count, which charged
+    * every micro-batch a fan of near-empty commits (stream_ttl_dedup ran
+    * 6.9 s at 8 cores and 13.8 s at 32). foreachBatch loops get the same
+    * scope: their keyed shuffles carry one micro-batch of rows.
+    *
+    * `fs.AbstractFileSystem.file.impl` is set to [[LocalCheckpointFs]].
+    * Spark copies the session conf into every Hadoop conf it builds for the
+    * query (offset and commit logs, state-store providers, the sink's
+    * metadata log), and `FileContext` builds its file system from that conf
+    * on each call, so every local checkpoint file skips Hadoop's
+    * `chmod`/`readlink` subprocesses. The key names only the `file` scheme:
+    * HDFS and object-store checkpoints keep their own file systems. */
+  private[graft] def withStreamingScope[T](spark: SparkSession)(f: => T): T = {
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"),
+      "fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName)
+    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
     // restore only after the blocking run completes: streams clone the
     // session conf on their own thread, so restoring right after start()
     // would race the clone
-    try f finally spark.conf.set(key, prev)
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Run `stream` to a parquet landing zone with AvailableNow + checkpoint,
@@ -151,7 +160,7 @@ object EventsIngest {
       landingDir: String,
       checkpointDir: String,
       outputMode: Option[org.apache.spark.sql.streaming.OutputMode] = None): DataFrame = {
-    withStatePartitions(stream.sparkSession) {
+    withStreamingScope(stream.sparkSession) {
       val writer = stream.writeStream
         .format("parquet")
         .option("path", landingDir)

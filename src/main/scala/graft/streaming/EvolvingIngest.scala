@@ -60,7 +60,7 @@ object EvolvingIngest {
       .parquet(stagedDir)
 
     val knownEpochs = epochSchemas.keySet.toSeq
-    EventsIngest.withStatePartitions(spark) {
+    EventsIngest.withStreamingScope(spark) {
     val q = stream.writeStream
       .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
         // the micro-batch is scanned once per epoch slice plus the

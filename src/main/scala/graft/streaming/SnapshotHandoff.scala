@@ -65,7 +65,7 @@ object SnapshotHandoff {
     val stream = spark.readStream.schema(changeSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagedChanges)
-    EventsIngest.withStatePartitions(spark) {
+    EventsIngest.withStreamingScope(spark) {
     val q = stream.writeStream
       .option("checkpointLocation", ckptDir)
       .trigger(Trigger.AvailableNow())

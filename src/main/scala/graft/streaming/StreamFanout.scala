@@ -35,7 +35,7 @@ object StreamFanout {
     EventsIngest.deleteRecursive(aggDir)
     EventsIngest.deleteRecursive(ckpt)
 
-    EventsIngest.withStatePartitions(spark) {
+    EventsIngest.withStreamingScope(spark) {
     val q = EventsIngest.fileStream(spark, eventsPath, schema)
       .writeStream
       .trigger(Trigger.AvailableNow())

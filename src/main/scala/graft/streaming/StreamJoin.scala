@@ -95,9 +95,6 @@ object StreamJoin {
       expr(s"c_user = p_user AND p_ts BETWEEN c_ts - INTERVAL $window AND c_ts"),
       joinType)
 
-    // a stream-stream join keeps FOUR state stores per shuffle partition;
-    // the scoping (and its rationale) now lives in runToParquet's
-    // withStatePartitions, shared by every stateful streaming lane
     EventsIngest.runToParquet(joined, landing, ckpt)
   }
 }

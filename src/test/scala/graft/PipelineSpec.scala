@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.hadoop.fs.{ChecksumException, FileContext}
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.spark.graftshim.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.Column
@@ -11,7 +13,7 @@ import org.apache.spark.sql.functions._
 import graft.sinks.BatchedSink
 import graft.sources.Tables
 import graft.storage.PersistedMap
-import graft.streaming.EventsIngest
+import graft.streaming.{EventsIngest, LocalCheckpointFs}
 
 class PipelineSpec extends AnyFunSuite {
   import TestSpark._
@@ -135,9 +137,78 @@ class PipelineSpec extends AnyFunSuite {
     assert(landed.count() === batch.count())
     // offsets were checkpointed (reader's persistedmap analogue)
     assert(Files.exists(java.nio.file.Paths.get(s"$work/ckpt/offsets")))
-    // re-running with the same checkpoint ingests nothing new (exactly-once)
-    val n2 = EventsIngest.ingestAvailableNow(
+    def restart(): Long = EventsIngest.ingestAvailableNow(
       spark, s"$Sf/events.parquet", s"$work/landing", s"$work/ckpt")
-    assert(n2 === batch.count())
+    // re-running with the same checkpoint ingests nothing new (exactly-once)
+    assert(restart() === batch.count())
+
+    // what landed, read through the sink's log and as files on disk
+    val cols = landed.columns.toSeq
+    def landedState() = (
+      spark.read.parquet(s"$work/landing")
+        .agg(count(lit(1)), countDistinct(col("event_id")), contentHash(cols)).head(),
+      ls(Paths.get(s"$work/landing")).map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).sorted)
+    val landed0 = landedState()
+    assert(landed0._1.getLong(0) === batch.count())
+    assert(landed0._1.getLong(1) === batch.count(), "duplicate event_ids landed")
+    val commits = Paths.get(s"$work/ckpt/commits")
+    val offsets = Paths.get(s"$work/ckpt/offsets")
+    val last = ls(commits).map(_.getFileName.toString).filter(_.forall(_.isDigit)).map(_.toLong).max
+
+    // crash after the sink wrote batch `last` but before its commit-log
+    // entry: the restart re-runs the batch and the sink's own log skips it
+    Files.delete(commits.resolve(s"$last"))
+    Files.delete(commits.resolve(s".$last.crc"))
+    assert(restart() === batch.count())
+    assert(landedState() === landed0)
+    assert(Files.exists(commits.resolve(s"$last")), "the re-run batch was not committed")
+
+    // a corrupt offset-log entry stops the restart instead of being read as
+    // valid: the last digit of the batch timestamp, which still parses
+    val entry = offsets.resolve(s"$last")
+    val bytes = Files.readAllBytes(entry)
+    val from = new String(bytes, "UTF-8").indexOf("\"batchTimestampMs\":") + 19
+    val at = bytes.indexWhere(b => !b.toChar.isDigit, from) - 1
+    assert(at > from)
+    bytes(at) = (bytes(at) ^ 1).toByte
+    Files.write(entry, bytes)
+    val err = intercept[Exception](restart())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ChecksumException]), err)
+    assert(landedState() === landed0)
+  }
+
+  test("streaming scope restores the session keys it sets, also when its body throws") {
+    val impl = "fs.AbstractFileSystem.file.impl"
+    val keys = Seq("spark.sql.shuffle.partitions", impl)
+    def session() = keys.map(spark.conf.getOption)
+    val before = session()
+    assert(before(1).isEmpty, s"$impl is set in the test session")
+
+    EventsIngest.freshIngest(spark, s"$Sf/events.parquet",
+      Files.createTempDirectory("scope").toString)
+    assert(session() === before)
+
+    EventsIngest.withStreamingScope(spark) {
+      val fc = FileContext.getFileContext(
+        Files.createTempDirectory("scope").toUri, spark.sessionState.newHadoopConf())
+      assert(fc.getDefaultFileSystem.isInstanceOf[LocalCheckpointFs])
+      assert(spark.conf.get(keys(0)) ===
+        sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+    }
+    assert(session() === before)
+
+    intercept[IllegalStateException](
+      EventsIngest.withStreamingScope(spark)(throw new IllegalStateException("body failed")))
+    assert(session() === before)
+
+    // a key that had a session value gets that value back
+    spark.conf.set(impl, classOf[LocalFs].getName)
+    try {
+      EventsIngest.withStreamingScope(spark)(())
+      assert(spark.conf.getOption(impl) === Some(classOf[LocalFs].getName))
+    } finally spark.conf.unset(impl)
+    assert(session() === before)
   }
 }
