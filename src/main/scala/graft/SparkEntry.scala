@@ -8150,8 +8150,8 @@ object SparkEntry {
       // Single-source BFS hop distances (operators/Bfs.scala) — the
       // reachability member of the graph tier, over the SAME hash-derived
       // digraph instance as graph_scc (one shared graph convention, so the
-      // directed-graph lanes compose). Frontier-form double-stepped BSP:
-      // per-round cost tracks the frontier's edges, not the visited set.
+      // directed-graph lanes compose). Delta-fold double-stepped BSP:
+      // per-round messages track the frontier's edges, not the visited set.
       // Output is the distance histogram from node 1 over reachable REAL
       // nodes (phantom hash targets dropped by the node-set semi-join on
       // both sides). Oracle recomputes by definition: recursive-CTE level
@@ -8171,8 +8171,8 @@ object SparkEntry {
       // practice since exact all-pairs is O(nm)) over the SAME 'scc-'
       // hash digraph as graph_bfs/graph_scc. The scale point is
       // operators/Bfs.distancesMulti: all k traversals run in ONE BSP
-      // loop — state is (source, node) pairs, every join keys on that
-      // compound, so the loop pays diameter-many rounds ONCE for the
+      // loop — state is (source, node) pairs placed by node, so the
+      // loop pays diameter-many rounds ONCE for the
       // union of frontiers instead of k times (per-round fixed overhead
       // dominates these metadata-scale shuffles — the measured
       // double-step argument compounded across sources). Output: top-20
@@ -8258,6 +8258,10 @@ object SparkEntry {
       val (_, edges) = hashDigraph(s, dir)
       val outd = edges.groupBy("src").agg(count(lit(1)).as("xd"))
       val ind = edges.groupBy("dst").agg(count(lit(1)).as("yd"))
+      // r is NULL when either degree sequence has zero variance (a
+      // regular graph, one edge, no edges): Pearson is undefined there
+      val den = sqrt((col("m") * col("sxx") - col("sx") * col("sx")).cast("double")) *
+        sqrt((col("m") * col("syy") - col("sy") * col("sy")).cast("double"))
       edges.join(outd, "src").join(ind, "dst")
         .agg(count(lit(1)).as("m"), sum("xd").as("sx"), sum("yd").as("sy"),
           sum(col("xd") * col("yd")).as("sxy"),
@@ -8265,9 +8269,8 @@ object SparkEntry {
           sum(col("yd") * col("yd")).as("syy"))
         .select(col("m"), col("sx"), col("sy"), col("sxy"), col("sxx"),
           col("syy"),
-          ((col("m") * col("sxy") - col("sx") * col("sy")).cast("double")
-            / (sqrt((col("m") * col("sxx") - col("sx") * col("sx")).cast("double"))
-              * sqrt((col("m") * col("syy") - col("sy") * col("sy")).cast("double"))))
+          when(den =!= 0.0,
+            (col("m") * col("sxy") - col("sx") * col("sy")).cast("double") / den)
             .as("r"))
     },
 
@@ -15971,8 +15974,8 @@ FROM rl r, br b ORDER BY r.score"""
         |  CAST(SUM(yd * yd) AS BIGINT) AS syy FROM ex)
         |SELECT m, sx, sy, sxy, sxx, syy,
         |  CAST(m * sxy - sx * sy AS DOUBLE)
-        |    / (sqrt(CAST(m * sxx - sx * sx AS DOUBLE))
-        |      * sqrt(CAST(m * syy - sy * sy AS DOUBLE))) AS r
+        |    / NULLIF(sqrt(CAST(m * sxx - sx * sx AS DOUBLE))
+        |      * sqrt(CAST(m * syy - sy * sy AS DOUBLE)), 0) AS r
         |FROM st""".stripMargin,
 
     // five likelihood-scored rounds, generated programmatically (same

@@ -32,11 +32,13 @@ import org.apache.spark.sql.graftshim.GraftBridge
   *     SCC, so the loop terminates; on hash-graph shapes (giant SCC +
   *     trimmed tail) it takes 1-2 phases.
   *
-  * All per-round work is keyed joins/aggregates over the EDGE table with
-  * localCheckpoint lineage truncation and bounded count() fixpoint checks
-  * — the connectedComponents contract. Labels are plain longs; the
-  * returned scc_id is the MIN member of each component (canonical,
-  * algorithm-independent — what a closure-based oracle recomputes).
+  * Trim rounds are keyed joins/aggregates over the EDGE table with
+  * localCheckpoint lineage truncation and a fused count per round; the
+  * coloring and backward-mark fixpoints run on the partition-resident
+  * delta fold (Fixpoint.deltaFold), one Spark job per round. Labels are
+  * plain longs; the returned scc_id is the MIN member of each component
+  * (canonical, algorithm-independent — what a closure-based oracle
+  * recomputes).
   */
 object Scc {
 
@@ -59,16 +61,16 @@ object Scc {
       maxIters: Int = 80,
       localFinishBelow: Long = 1000L): DataFrame = {
     // NOTE (measured at sf1, 150k nodes / 257k edges): disabling AQE for
-    // the fixpoint loops was tried and is ~50% SLOWER (75.6 s vs 50.6 s)
-    // — AQE's post-shuffle coalescing of these metadata-scale frames
-    // outweighs its per-exchange re-plan latency. Leave AQE alone.
-    // FUSED materialize+count (r16, every fixpoint below): public
-    // localCheckpoint(true) runs an internal count whose value it discards,
-    // so each loop round paid a SECOND whole-frame job just to learn its
-    // convergence signal — GraftBridge.localCheckpointCount returns the
-    // counts from the materialization job itself (one job per round
-    // instead of two). Neither form keeps a layout built before the
-    // checkpoint: under AQE the checkpointed frame reports no partitioning.
+    // the DataFrame fixpoint loops was tried and is ~50% SLOWER (75.6 s
+    // vs 50.6 s) — AQE's post-shuffle coalescing of these metadata-scale
+    // frames outweighs its per-exchange re-plan latency. Leave AQE alone.
+    // FUSED materialize+count (r16, the trim rounds and the remainder):
+    // public localCheckpoint(true) runs an internal count whose value it
+    // discards, so each trim round paid a SECOND whole-frame job just to
+    // learn its convergence signal — GraftBridge.localCheckpointCount
+    // returns the counts from the materialization job itself. Neither
+    // form keeps a layout built before the checkpoint: under AQE the
+    // checkpointed frame reports no partitioning.
     val (rem0, remCount0, _) =
       GraftBridge.localCheckpointCount(nodes.select(col("node")).distinct())
     var remaining = rem0
@@ -152,65 +154,35 @@ object Scc {
           .join(remaining.select(col("node").as("dst")), Seq("dst"), "left_semi")
           .localCheckpoint(true)
         // ---- 2. forward max-color fixpoint (propagate along edges),
-        // through the shared double-stepped delta fold
-        // (Fixpoint.deltaFold): max is monotone and idempotent, so a
-        // node's outgoing contribution needs re-pushing only in the round
-        // AFTER its color changed — each step pushes only the changed
-        // set's colors one hop along the trimmed edges and folds them
-        // into the full color frame with a left join, so the per-round
-        // shuffle volume is the changed delta and its out-edges plus the
-        // color frame's re-exchange, not the O(V + E) full-frame push.
-
-        // one delta step: (full colors, changed) -> folded (node, color, chg)
-        def deltaStep(c: DataFrame, ch: DataFrame): DataFrame = {
-          val pushed = es
-            .join(ch.select(col("node").as("src"), col("color").as("pc")), Seq("src"))
-            .groupBy(col("dst").as("node")).agg(max("pc").as("pc"))
-          c.join(pushed, Seq("node"), "left")
-            .select(col("node"),
-              greatest(col("color"), coalesce(col("pc"), col("color"))).as("color"),
-              (coalesce(col("pc"), col("color")) > col("color")).as("chg"))
-        }
+        // through the shared partition-resident delta fold
+        // (Fixpoint.deltaFold, combine max, +0 per hop): max is monotone
+        // and idempotent, so a node's outgoing contribution needs
+        // re-pushing only in the step AFTER its color changed — each step
+        // moves only the changed set's colors along the trimmed edges.
         val colors = Fixpoint.deltaFold(
-            remaining.select(col("node"), col("node").as("color"), lit(true).as("chg")),
-            Seq("node", "color"), maxIters,
-            s"coloring did not converge in $maxIters rounds")(deltaStep)
+          remaining.select(col("node"), col("node").as("color"), lit(true).as("chg")),
+          es, Fixpoint.Max, 0L, maxIters, s"coloring did not converge in $maxIters rounds")
         // ---- 3. backward mark fixpoint within color classes, the same
-        // delta fold: the state is ONE (node, color, m) frame over the
-        // remaining nodes, m = reaches-pivot flag, seeded at the pivots
-        // (node == color).
-        // INTRA-CLASS edges are annotated ONCE per phase (r15): the
-        // backward walk only ever crosses edges whose endpoints share a
-        // color, and for such an edge the class label IS the edge's
-        // color — so each hop is one semi-join into the intra-class edge
-        // table, with NO per-hop colors join at all.
+        // fold against edge direction. The mark IS the class color: a
+        // pivot (node == color) starts marked with its color, every other
+        // node unmarked (NULL), and a mark crosses only INTRA-CLASS edges,
+        // annotated ONCE per phase — for such an edge the class label is
+        // both endpoints' color, so max with +0 sets a node's mark to its
+        // own color exactly when it reaches its pivot. The converged
+        // state is (node, color) for the marked nodes only.
         val esIntra = {
           val cs = colors.select(col("node").as("src"), col("color").as("scolor"))
           val cd = colors.select(col("node").as("dst"), col("color").as("dcolor"))
           es.join(cs, Seq("src")).join(cd, Seq("dst"))
             .where(col("scolor") === col("dcolor"))
-            .select(col("src"), col("dst"))
-            .localCheckpoint(true)
-        }
-        // one backward step: fold the in-class predecessors of the changed
-        // set into the mark flags; chg marks first-time marks only
-        def backStep(st: DataFrame, ch: DataFrame): DataFrame = {
-          val pushed = esIntra
-            .join(ch.select(col("node").as("dst")), Seq("dst"), "left_semi")
-            .select(col("src").as("node")).distinct()
-            .withColumn("p", lit(true))
-          st.join(pushed, Seq("node"), "left")
-            .select(col("node"), col("color"),
-              (col("m") || col("p").isNotNull).as("m"),
-              (!col("m") && col("p").isNotNull).as("chg"))
+            .select(col("dst").as("src"), col("src").as("dst"))
         }
         val pivot = col("node") === col("color")
         val marked = Fixpoint.deltaFold(
-            colors.select(col("node"), col("color"), pivot.as("m"), pivot.as("chg")),
-            Seq("node", "color", "m"), maxIters,
-            s"backward mark did not converge in $maxIters rounds")(backStep)
-          .where(col("m")).select(col("node"), col("color"))
-        done += marked.select(col("node"), col("color").as("pivot")).localCheckpoint(true)
+          colors.select(col("node"), when(pivot, col("color")).as("color"), pivot.as("chg")),
+          esIntra, Fixpoint.Max, 0L, maxIters,
+          s"backward mark did not converge in $maxIters rounds")
+        done += marked.select(col("node"), col("color").as("pivot"))
         val (rem2, remC, _) = GraftBridge.localCheckpointCount(
           remaining.join(marked.select("node"), Seq("node"), "left_anti"))
         remaining = rem2

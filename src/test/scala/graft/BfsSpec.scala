@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Bfs
 
-/** Frontier double-stepped BFS pinned against a driver-side queue BFS on
+/** Delta-fold double-stepped BFS pinned against a driver-side queue BFS on
   * several graph shapes — distances must match exactly, unreachable nodes
   * must be absent, and phantom edge targets (ids outside the node set)
   * must be dropped. */
@@ -54,11 +54,17 @@ class BfsSpec extends AnyFunSuite {
       // one-node graph
       (1, Nil, 0),
       // empty node set: the source is not a node, nothing is reached
-      (0, Nil, 0))
+      (0, Nil, 0),
+      // duplicate edges, self-loops and edges from and to phantom ids
+      { val n = 9; (n, Seq((0, 1), (0, 1), (1, 1), (1, 2), (2, 2), (2, 0), (2, 30),
+        (30, 3), (4, 5), (5, 5)), 0) })
     for (((n, edges, src) , si) <- shapes.zipWithIndex) {
-      // reference drops phantom targets (w < n) exactly like the operator's
-      // node-set semi-join
-      assert(run(n, edges, src) === reference(n, edges, src), s"shape $si")
+      // reference drops phantom targets (w < n) exactly like the operator
+      val expect = reference(n, edges, src)
+      assert(run(n, edges, src) === expect, s"shape $si")
+      // more shuffle partitions than nodes leaves partitions empty
+      if (n < 16)
+        assert(withShufflePartitions(16)(run(n, edges, src)) === expect, s"shape $si, 16 parts")
     }
   }
 

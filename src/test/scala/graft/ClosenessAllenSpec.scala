@@ -26,6 +26,20 @@ class ClosenessAllenSpec extends AnyFunSuite {
         .collect().map(r => (s, r.getLong(0)) -> r.getLong(1))
     }.toMap
     assert(multi === singles)
+
+    // a source that reaches nothing (node 4 has no out-edges, node 5 only
+    // a phantom one), duplicate edges and a self-loop, with more shuffle
+    // partitions than nodes so some partitions are empty
+    val small = (0L to 7L).toDF("node")
+    val smallEdges = Seq((0L, 1L), (0L, 1L), (1L, 1L), (1L, 2L), (2L, 3L), (3L, 0L),
+      (5L, 40L), (40L, 6L), (6L, 7L)).toDF("src", "dst")
+    val got = withShufflePartitions(16) {
+      Bfs.distancesMulti(small, smallEdges, Seq(0L, 4L, 5L, 6L))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    }
+    assert(got === Map(
+      (0L, 0L) -> 0L, (0L, 1L) -> 1L, (0L, 2L) -> 2L, (0L, 3L) -> 3L,
+      (4L, 4L) -> 0L, (5L, 5L) -> 0L, (6L, 6L) -> 0L, (6L, 7L) -> 1L))
   }
 
   test("the Allen ladder classifies one crafted pair per relation") {

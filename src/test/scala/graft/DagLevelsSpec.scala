@@ -9,7 +9,10 @@ import graft.operators.DagLevels
 class DagLevelsSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def reference(n: Int, edges: Seq[(Int, Int)]): Map[Long, Long] = {
+  /** Edges with an endpoint outside 0 until n (phantom ids) carry nothing,
+    * as in the operator. */
+  private def reference(n: Int, allEdges: Seq[(Int, Int)]): Map[Long, Long] = {
+    val edges = allEdges.filter { case (a, b) => a < n && b < n }
     val lvl = Array.fill(n)(0L)
     for ((a, b) <- edges.sortBy(_._1); if lvl(b) < lvl(a) + 1) lvl(b) = lvl(a) + 1
     // i < j edges processed in src order is a valid topological sweep only
@@ -45,14 +48,25 @@ class DagLevelsSpec extends AnyFunSuite {
       // one-node graph
       (1, Nil),
       // empty node set
-      (0, Nil))
-    for (((n, edges), si) <- shapes.zipWithIndex)
-      assert(run(n, edges) === reference(n, edges), s"shape $si")
+      (0, Nil),
+      // duplicate edges, and edges from and to phantom ids (a phantom
+      // source never sends; a message to a phantom target is dropped)
+      (6, Seq((0, 1), (0, 1), (1, 2), (1, 2), (2, 9), (9, 3), (3, 4), (4, 12))))
+    for (((n, edges), si) <- shapes.zipWithIndex) {
+      val expect = reference(n, edges)
+      assert(run(n, edges) === expect, s"shape $si")
+      // more shuffle partitions than nodes leaves partitions empty
+      if (n < 16) assert(withShufflePartitions(16)(run(n, edges)) === expect, s"shape $si, 16 parts")
+    }
   }
 
   test("a cycle fails the guard loudly instead of looping") {
     intercept[IllegalArgumentException] {
       run(3, Seq((0, 1), (1, 2), (2, 0)))
+    }
+    // a self-loop is a cycle of length one
+    intercept[IllegalArgumentException] {
+      run(3, Seq((0, 1), (1, 1), (1, 2)))
     }
   }
 }

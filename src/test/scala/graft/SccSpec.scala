@@ -92,12 +92,19 @@ class SccSpec extends AnyFunSuite {
       // one-node graph
       (1, Nil),
       // empty node set
-      (0, Nil))
+      (0, Nil),
+      // duplicate edges and self-loops on a cycle, a self-looped
+      // singleton and edges to and from phantom ids
+      (8, Seq((0, 1), (0, 1), (1, 2), (2, 0), (2, 0), (1, 1), (3, 3), (3, 4),
+        (4, 20), (20, 5), (5, 6), (6, 5), (6, 6))))
     for (((n, edges), si) <- shapes.zipWithIndex) {
-      val adj = edges.distinct.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      // Tarjan on the graph without its phantom-id edges
+      val adj = edges.distinct.filter { case (a, b) => a < n && b < n }
+        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
       val expect = tarjan(n, adj).map { case (k, v) => k.toLong -> v.toLong }
-      val got = run(n, edges.distinct)
-      assert(got === expect, s"shape $si")
+      assert(run(n, edges) === expect, s"shape $si")
+      // more shuffle partitions than nodes leaves partitions empty
+      if (n < 16) assert(withShufflePartitions(16)(run(n, edges)) === expect, s"shape $si, 16 parts")
     }
   }
 

@@ -18,4 +18,14 @@ object TestSpark {
     s
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n`, restoring
+    * the previous value afterwards (specs use it to leave partitions of
+    * a small graph empty). */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, before)
+  }
 }
