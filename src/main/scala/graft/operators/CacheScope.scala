@@ -21,11 +21,35 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object CacheScope {
 
-  /** A registered scope awaiting its releasing action. `done` is shared
-    * with the listener so the sweep can drop already-released scopes (and
-    * their captured plan/DataFrame references) immediately instead of
-    * holding them until TTL. */
-  private final case class Scope(createdAtMs: Long, done: AtomicBoolean, release: () => Unit)
+  /** A registered scope: the session listener that releases `cached`
+    * after the first completed action whose plan contains it. A release
+    * also removes the scope from `pending`, so a released scope keeps
+    * neither the cached DataFrame, its plan nor the listener reachable. */
+  private final class Scope(cached: DataFrame) extends QueryExecutionListener {
+    val createdAtMs: Long = System.currentTimeMillis()
+    private val target = cached.queryExecution.analyzed
+    private val done = new AtomicBoolean(false)
+
+    def released: Boolean = done.get()
+
+    def release(): Unit =
+      if (done.compareAndSet(false, true)) {
+        cached.unpersist(blocking = false)
+        cached.sparkSession.listenerManager.unregister(this)
+        pending.remove(this)
+      }
+
+    private def maybeRelease(qe: QueryExecution): Unit = {
+      val hit =
+        try qe.analyzed.exists(_.sameResult(target))
+        catch { case _: Throwable => true } // when in doubt, release
+      if (hit) release()
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      maybeRelease(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      maybeRelease(qe)
+  }
   private val pending = new java.util.concurrent.ConcurrentLinkedQueue[Scope]()
 
   /** Fallback TTL: a scope whose result was never executed would otherwise
@@ -36,12 +60,7 @@ object CacheScope {
 
   private def sweepStale(): Unit = {
     val now = System.currentTimeMillis()
-    val it = pending.iterator()
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.done.get()) it.remove()
-      else if (now - s.createdAtMs > staleTtlMs) { s.release(); it.remove() }
-    }
+    pending.forEach(s => if (now - s.createdAtMs > staleTtlMs) s.release())
   }
 
   /** Returns `result` unchanged; registers a one-shot session listener that
@@ -57,30 +76,16 @@ object CacheScope {
     * the TTL sweep above reclaims the blocks on a later scope creation. */
   def unpersistAfterUse(result: DataFrame, cached: DataFrame): DataFrame = {
     sweepStale()
-    val session = cached.sparkSession
-    val target = cached.queryExecution.analyzed
-    val done = new AtomicBoolean(false)
-    val listener = new QueryExecutionListener {
-      private def maybeRelease(qe: QueryExecution): Unit = {
-        val hit =
-          try qe.analyzed.exists(_.sameResult(target))
-          catch { case _: Throwable => true } // when in doubt, release
-        if (hit && done.compareAndSet(false, true)) {
-          cached.unpersist(blocking = false)
-          session.listenerManager.unregister(this)
-        }
-      }
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        maybeRelease(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        maybeRelease(qe)
-    }
-    session.listenerManager.register(listener)
-    pending.add(Scope(System.currentTimeMillis(), done, () =>
-      if (done.compareAndSet(false, true)) {
-        cached.unpersist(blocking = false)
-        session.listenerManager.unregister(listener)
-      }))
+    val scope = new Scope(cached)
+    pending.add(scope)
+    cached.sparkSession.listenerManager.register(scope)
     result
+  }
+
+  /** Registered scopes already released: 0 once every release has run. */
+  private[graft] def releasedPending: Int = {
+    var n = 0
+    pending.forEach(s => if (s.released) n += 1)
+    n
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 import graft.expressions.{ChunkBoundaries, CosineSim, EqualPositionCount, HyperplaneBandKeys, MinHashSig, ShingleHashes, SimHash16, Sketch, SortedIntersectCount}
 import graft.functions.TextFunctions._
@@ -38,8 +39,8 @@ object Dedup {
   /** @param maxBucketSize optional candidate-volume guard: an LSH band
     *   bucket holding B docs yields B(B−1)/2 candidate pairs, and ONE
     *   pathological bucket (boilerplate, empty-ish docs, adversarial
-    *   spam) can dominate the whole join with no cap on B. When set,
-    *   buckets LARGER than the cap are dropped before the self-join —
+    *   spam) can dominate the whole pair count with no cap on B. When
+    *   set, buckets LARGER than the cap emit no pairs —
     *   recall loss is confined to pairs whose every shared band is a
     *   mega-bucket (on real corpora: exactly the boilerplate one wants
     *   gone) and the drop is OBSERVABLE via [[lshBucketCensus]], never
@@ -55,19 +56,30 @@ object Dedup {
     def rowsPerBand: Int = numPerm / bands
   }
 
-  /** Near-duplicate pairs via MinHash + banded LSH, exact-verified.
+  /** Near-duplicate pairs via MinHash + banded LSH, exact-verified:
+    * (id_a, id_b, jacc) with id_a < id_b and exact shingle Jaccard
+    * `jacc >= cfg.threshold`. Ids must be integral.
     *
-    * Pipeline (each step one narrow projection or one keyed shuffle):
-    *  1. shingle + hash + MinHash signature         (single pass, codegen)
-    *  2. explode band hashes                        (n * bands rows, 16B each)
-    *  3. self-join on (band_id, band_hash), id<id   (shuffle on band key)
-    *  4. distinct candidate pairs                   (shuffle on pair)
-    *  5. join back shingle sets, exact Jaccard >= t (two broadcast-or-shuffle
-    *     hash joins keyed by doc id)
+    * Pipeline:
+    *  1. sketch: shingle + hash + MinHash signature + band hashes, one
+    *     narrow codegen'd projection; shingle sets are not kept;
+    *  2. candidates, shared-band cut and signature estimate in ONE Spark
+    *     job on partition-resident blocks ([[LshPairs]]): one shuffle
+    *     places band rows by bucket and signatures by id, each bucket
+    *     emits its id_a < id_b pairs, a spill-safe combine counts a pair's
+    *     shared bands at the owner of id_a and cuts them at μ−6σ (see
+    *     `minSharedBands`) BEFORE any signature is read, and two id-keyed
+    *     hops against the signature blocks keep the pairs whose MinHash
+    *     estimate reaches `threshold − 0.15`;
+    *  3. exact Jaccard on survivors only: the shingle sets of the docs in
+    *     estimate survivors are re-derived from the raw docs (a semi-join
+    *     on the survivor ids) and joined to both pair sides.
     *
-    * With 128 perms / 32 bands / r=4, P[candidate | J=0.9] = 1-(1-0.9^4)^32
-    * ≈ 1 - 3e-15: recall at the threshold is effectively exact, which is why
-    * the verified output can match an all-pairs oracle.
+    * Nothing is persisted or broadcast by hand, so nothing outlives the
+    * query. With 128 perms / 32 bands / r=4, P[candidate | J=0.9] =
+    * 1-(1-0.9^4)^32 ≈ 1 - 3e-15: recall at the threshold is effectively
+    * exact, which is why the verified output can match an all-pairs
+    * oracle.
     */
   def minhashNearDupPairs(
       docs: DataFrame,
@@ -82,7 +94,7 @@ object Dedup {
     * ONE row — (n_buckets, n_buckets_dropped, n_rows_dropped,
     * n_pairs_dropped), where n_pairs_dropped = Σ B·(B−1)/2 over the
     * dropped buckets: the EXACT candidate-pair mass the cap removed from
-    * the self-join. The guard is never silent — a capping pipeline
+    * the band candidates. The guard is never silent — a capping pipeline
     * surfaces this row next to its output (the no-silent-caps rule). */
   def lshBucketCensus(
       docs: DataFrame,
@@ -123,118 +135,61 @@ object Dedup {
       Sketch.column(ShingleHashes(Sketch.expr(col(textCol)), n, word = false)),
       cfg, blockCol)
 
+  /** The shared-band cut: a pair at exactly `threshold` agrees on
+    * Binomial(bands, t^r) bands — μ = bands·t^r, σ² = μ(1−t^r) — so
+    * cutting candidates at μ−6σ shared bands loses a true threshold pair
+    * with P ~ 1e-9 while discarding the low-similarity collision mass
+    * before any signature is read (at sf10, 87% of 39M distinct
+    * candidates shared ≤4 of 32 bands). Configs whose μ−6σ ≤ 1 get 1,
+    * i.e. no cut. */
+  private[graft] def minSharedBands(cfg: MinHashConfig): Int = {
+    val pBand = math.pow(cfg.threshold, cfg.rowsPerBand)
+    val muBands = cfg.bands * pBand
+    math.max(1.0, math.ceil(muBands - 6 * math.sqrt(muBands * (1 - pBand)))).toInt
+  }
+
   private def nearDupPairs(
       docs: DataFrame,
       idCol: String,
       shExpr: Column,
       cfg: MinHashConfig,
       blockCol: Option[String]): DataFrame = {
-    // (id, sh, [block]) built lazily from the raw docs — the full shingle
-    // arrays (KBs per doc) are deliberately NEVER persisted or shuffled
-    // corpus-wide. r9 scale finding: persisting them alongside the
-    // signatures put the whole corpus's shingle sets through the cache AND
-    // through the verify joins (500k docs at sf10 → multi-GB, spilling);
-    // only SURVIVORS ever need their sets, so only survivors pay.
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
+      s"near-dup ids must be integral, got $idType")
+    // (id, sh[, blk]); a doc with no shingles or a null block never pairs
     def shingled(src: DataFrame): DataFrame =
-      src.select(Seq(col(idCol).as("id"), shExpr.as("sh")) ++ blockCol.map(col): _*)
-        .where(size(col("sh")) > 0)
+      src.select(Seq(col(idCol).as("id"), shExpr.as("sh")) ++ blockCol.map(col(_).as("blk")): _*)
+        .where(size(col("sh")) > 0 && blockCol.fold(lit(true))(_ => col("blk").isNotNull))
 
-    // Persisted sketch table is NARROW: (id, sig, bands[, block]) — ~1.3 KB
-    // per doc at 128 perms — consumed by both sides of the band self-join
-    // and the estimate prefilter. At cluster scale this is the standard
-    // "persist the signatures" step of every LSH pipeline.
-    val withSig = shingled(docs)
+    val sketch = shingled(docs)
       .withColumn("sig", Sketch.column(MinHashSig(Sketch.expr(col("sh")), cfg.numPerm)))
       .withColumn("bands", lshBandHashes(col("sig"), cfg.bands, cfg.rowsPerBand))
-      .select(Seq(col("id"), col("sig"), col("bands")) ++ blockCol.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id").cast(LongType), col("sig"), col("bands"),
+        blockCol.fold(lit(0L))(_ => xxhash64(col("blk"))))
+    val pairSchema = StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType)))
+    val plausible = docs.sparkSession.createDataFrame(
+      LshPairs.plausible(sketch, cfg.numPerm, minSharedBands(cfg), cfg.maxBucketSize,
+        cfg.threshold - 0.15), pairSchema)
+      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"))
 
-    val bandCols = Seq(col("id"), posexplode(col("bands"))) ++ blockCol.map(col)
-    val bandTableRaw = withSig
-      .select(bandCols: _*)
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-    // candidate-volume guard (see MinHashConfig.maxBucketSize): one keyed
-    // count + one semi-join — buckets above the cap never reach the
-    // self-join, bounding per-key fan-out at cap² instead of unbounded
-    val bandTable = cfg.maxBucketSize match {
-      case None => bandTableRaw
-      case Some(cap) =>
-        val keyCols = Seq("band_id", "band_hash") ++ blockCol
-        val small = bandTableRaw.groupBy(keyCols.map(col): _*)
-          .agg(count(lit(1)).as("bsz"))
-          .where(col("bsz") <= cap)
-          .select(keyCols.map(col): _*)
-        bandTableRaw.join(small, keyCols, "left_semi")
-    }
-
-    // The shared-band COUNT is itself a similarity estimator (the banding
-    // twin of the numPerm-position estimate below): a pair at exactly
-    // `threshold` agrees on Binomial(bands, t^r) bands — μ = bands·t^r,
-    // σ² = μ(1−t^r) — so cutting at μ−6σ loses a true threshold pair with
-    // P ~ 1e-9 while discarding the low-similarity collision mass BEFORE
-    // any signature is fetched. r9 sf10 finding: 500k short docs produced
-    // 39M distinct candidates, 87% sharing ≤4 of 32 bands; the signature
-    // join over them — not the kernels, not the self-join — was the wall
-    // (75 s → the count is free from the dedup groupBy, signatures are
-    // not). Configs whose μ−6σ ≤ 1 get minShared = 1, i.e. a no-op.
-    val pBand = math.pow(cfg.threshold, cfg.rowsPerBand)
-    val muBands = cfg.bands * pBand
-    val minShared = math.max(1.0,
-      math.ceil(muBands - 6 * math.sqrt(muBands * (1 - pBand)))).toInt
-    val joinKeys = Seq("band_id", "band_hash") ++ blockCol
-    val candidates = bandTable.as("x")
-      .join(bandTable.as("y"), joinKeys, "inner")
-      .where(col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .agg(count(lit(1)).as("shared_bands"))
-      .where(col("shared_bands") >= minShared)
-      .select(col("id_a"), col("id_b"))
-
-    // Two-stage verification. Stage 1 joins only the fixed-width signatures
-    // and keeps pairs whose MinHash ESTIMATE clears a slack threshold —
-    // with 128 perms the estimator's σ at J=0.9 is ~0.027, so a 6σ slack
-    // (0.15) loses nothing while discarding the ~0-similarity bucket
-    // collisions that dominate candidate volume. Stage 2 fetches the full
-    // shingle sets only for survivors and computes exact Jaccard.
-    // `plausible` is persisted (tiny pair list) because it feeds both the
-    // survivor-id fetch and the final join — without it the band self-join
-    // would re-execute per consumer (the r7 union-re-executes lesson).
-    val sigs = withSig.select(col("id"), col("sig"))
-    val est = Sketch.column(EqualPositionCount(
-      Sketch.expr(col("ga.sig")), Sketch.expr(col("gb.sig"))))
-    val plausible = candidates
-      .join(sigs.as("ga"), col("id_a") === col("ga.id"))
-      .join(sigs.as("gb"), col("id_b") === col("gb.id"))
-      .where(est.cast("double") / cfg.numPerm >= cfg.threshold - 0.15)
-      .select(col("id_a"), col("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // Survivor-only shingle fetch: semi-join the survivor ids against the
-    // raw docs (AQE broadcasts the id list when it is small — the healthy
-    // case — and falls back to a keyed shuffle under adversarial candidate
-    // volume), THEN run the shingle kernel on just those rows. Persisted
-    // because both pair sides consume it.
+    // survivor-only shingle fetch: the full shingle sets (KBs per doc) are
+    // never shuffled or cached corpus-wide, only survivors pay for them
     val pids = plausible
       .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
     val shSets = shingled(docs.join(pids, Seq(idCol), "left_semi"))
-      .select(col("id"), col("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     val inter = Sketch.column(SortedIntersectCount(
       Sketch.expr(col("sa.sh")), Sketch.expr(col("sb.sh"))))
-    val verified = plausible
+    val joined = plausible
       .join(shSets.as("sa"), col("id_a") === col("sa.id"))
       .join(shSets.as("sb"), col("id_b") === col("sb.id"))
+    // the engine's buckets key on a 64-bit hash of the block; equal
+    // blocks are checked exactly here
+    blockCol.fold(joined)(_ => joined.where(col("sa.blk") === col("sb.blk")))
       .select(
         col("id_a"), col("id_b"),
         (inter.cast("double") / (size(col("sa.sh")) + size(col("sb.sh")) - inter)).as("jacc"))
       .where(col("jacc") >= cfg.threshold)
-    // release the caches once the consuming action finishes — a session
-    // running many queries must not accumulate orphaned blocks
-    CacheScope.unpersistAfterUse(
-      CacheScope.unpersistAfterUse(
-        CacheScope.unpersistAfterUse(verified, withSig), plausible), shSets)
   }
 
   /** Asymmetric CONTAINMENT near-dup pairs: C(A,B) = |S(A)∩S(B)| /
@@ -322,7 +277,7 @@ object Dedup {
     * O(delta · bands) shuffle rows plus the survivors' text, never a
     * corpus re-scan. Returns (id_base, id_delta, jacc), exact-verified at
     * `cfg.threshold`, so the output equals the all-pairs cross oracle.
-    * Same banding math as the self-join variant: recall at the threshold
+    * Same banding math as [[minhashNearDupPairs]]: recall at the threshold
     * is 1 − (1 − t^r)^bands ≈ 1 − 3e-15 at the 128/32 defaults. */
   def minhashProbePairs(
       base: DataFrame,
@@ -349,13 +304,10 @@ object Dedup {
     val baseSig = withSig(base)
     val deltaSig = withSig(delta)
 
-    // same μ−6σ shared-band prefilter as the self-join path: the count is
-    // free from the pair groupBy and discards the low-similarity collision
-    // mass before any signature is fetched
-    val pBand = math.pow(cfg.threshold, cfg.rowsPerBand)
-    val muBands = cfg.bands * pBand
-    val minShared = math.max(1.0,
-      math.ceil(muBands - 6 * math.sqrt(muBands * (1 - pBand)))).toInt
+    // same μ−6σ shared-band cut as minhashNearDupPairs: the count is free
+    // from the pair groupBy and discards the low-similarity collision mass
+    // before any signature is fetched
+    val minShared = minSharedBands(cfg)
     val candidates = bandTable(deltaSig).as("x")
       .join(bandTable(baseSig).as("y"), Seq("band_id", "band_hash"), "inner")
       .groupBy(col("x.id").as("id_delta"), col("y.id").as("id_base"))

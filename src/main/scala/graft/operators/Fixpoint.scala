@@ -7,6 +7,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{BooleanType, LongType, StructType}
 
+import graft.operators.Blocks.{Cols, exchange, order}
+
 /** The delta-fold BSP fixpoint shared by Bfs, DagLevels and Scc's coloring
   * and backward-mark phases, run partition-resident in the Pregel/GraphX
   * manner. The state and the adjacency are co-partitioned once by one
@@ -46,9 +48,6 @@ private[operators] object Fixpoint {
   case object Max extends Combine(Long.MinValue) {
     def better(a: Long, b: Long): Boolean = a > b
   }
-
-  /** Rows as parallel long columns. */
-  private type Cols = Array[Array[Long]]
 
   /** One partition's state: distinct keys sorted by (node, tag). */
   private final class State(val node: Array[Long], val tag: Array[Long],
@@ -147,32 +146,6 @@ private[operators] object Fixpoint {
     }
     spark.createDataFrame(rows, StructType(fields.dropRight(1)))
   }
-
-  /** Moves rows to the partition that owns their column-0 node: each input
-    * partition yields one block, split into one block per target
-    * partition; each output partition concatenates what it received. */
-  private def exchange(part: HashPartitioner, blocks: RDD[Cols]): RDD[Cols] =
-    blocks.flatMap { cs =>
-      val n = part.numPartitions
-      val rowsTo = new Array[Int](n)
-      val to = cs(0).map(k => part.getPartition(k))
-      to.foreach(p => rowsTo(p) += 1)
-      val out = Array.tabulate(n)(p => cs.map(_ => new Array[Long](rowsTo(p))))
-      val fill = new Array[Int](n)
-      var i = 0
-      while (i < to.length) {
-        val p = to(i)
-        var c = 0
-        while (c < cs.length) { out(p)(c)(fill(p)) = cs(c)(i); c += 1 }
-        fill(p) += 1
-        i += 1
-      }
-      (0 until n).iterator.filter(rowsTo(_) > 0).map(p => (p, out(p)))
-    }.partitionBy(part).mapPartitions { it =>
-      val got = it.map(_._2).toArray
-      val width = if (got.isEmpty) 0 else got(0).length
-      Iterator(Array.tabulate(width)(c => Array.concat(got.map(_(c)).toIndexedSeq: _*)))
-    }
 
   /** The state block of (node, tag, value, chg) columns: keys sorted,
     * duplicate keys folded. An empty partition gets an empty block. */
@@ -294,32 +267,5 @@ private[operators] object Fixpoint {
   private def mix(n: Long, t: Long): Int = {
     val h = (n * 0x9E3779B97F4A7C15L) ^ (t * 0xC2B2AE3D27D4EB4FL)
     (h ^ (h >>> 32)).toInt
-  }
-
-  /** Row indices ordered by (a, b): a bottom-up merge sort over primitive
-    * arrays. */
-  private def order(a: Array[Long], b: Array[Long]): Array[Int] = {
-    val n = a.length
-    var from = Array.tabulate(n)(identity)
-    var to = new Array[Int](n)
-    var w = 1
-    while (w < n) {
-      var lo = 0
-      while (lo < n) {
-        val mid = math.min(lo + w, n)
-        val hi = math.min(lo + 2 * w, n)
-        var (i, j, k) = (lo, mid, lo)
-        while (k < hi) {
-          if (j >= hi || (i < mid && cmp(a(from(i)), b(from(i)), a(from(j)), b(from(j))) <= 0)) {
-            to(k) = from(i); i += 1
-          } else { to(k) = from(j); j += 1 }
-          k += 1
-        }
-        lo = hi
-      }
-      val t = from; from = to; to = t
-      w *= 2
-    }
-    from
   }
 }
