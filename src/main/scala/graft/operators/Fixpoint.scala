@@ -7,7 +7,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{BooleanType, LongType, StructType}
 
-import graft.operators.Blocks.{Cols, exchange, order}
+import graft.operators.Blocks.{Cols, cmp, exchange, mix, order}
 
 /** The delta-fold BSP fixpoint shared by Bfs, DagLevels and Scc's coloring
   * and backward-mark phases, run partition-resident in the Pregel/GraphX
@@ -259,13 +259,5 @@ private[operators] object Fixpoint {
       }
     }
     new State(s.node, s.tag, value, chg)
-  }
-
-  private def cmp(n1: Long, t1: Long, n2: Long, t2: Long): Int =
-    if (n1 != n2) java.lang.Long.compare(n1, n2) else java.lang.Long.compare(t1, t2)
-
-  private def mix(n: Long, t: Long): Int = {
-    val h = (n * 0x9E3779B97F4A7C15L) ^ (t * 0xC2B2AE3D27D4EB4FL)
-    (h ^ (h >>> 32)).toInt
   }
 }
