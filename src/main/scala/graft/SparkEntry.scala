@@ -2024,7 +2024,7 @@ object SparkEntry {
       val work = workDir("sdedup", dir)
       // materialized once (r15): the doubled delivery staged the same
       // snapshot twice from two separate parquet scans
-      val raw = s.read.parquet(s"$dir/events.parquet").localCheckpoint(true)
+      val raw = Tables.read(s, s"$dir/events.parquet").localCheckpoint(true)
       raw.repartition(1).write.mode("overwrite").parquet(s"$work/staged")
       raw.repartition(1).write.mode("append").parquet(s"$work/staged")
       EventsIngest.ingestReplaySafe(s, s"$work/staged", s"$work/landing",

@@ -1,10 +1,12 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the sketch/vector hot paths.
@@ -84,38 +86,51 @@ case class ShingleHashes(child: Expression, n: Int, word: Boolean)
   // codegen stays unbroken
   def compute(input: UTF8String): ArrayData = {
     val text = input.toString
-    val set = new java.util.TreeSet[java.lang.Long]()
-    if (word) {
+    val len = text.length
+    // every shingle's hash goes into one primitive array, which is then
+    // sorted and deduplicated in place: no boxed Long or tree node per shingle
+    val hashes = if (word) {
       // shingle = n consecutive tokens joined by ' '; hashing the original
       // character span between token boundaries is equivalent and copy-free
-      val len = text.length
-      val starts = new scala.collection.mutable.ArrayBuffer[Int]()
-      starts += 0
+      var nTok = 1
       var i = 0
+      while (i < len) { if (text.charAt(i) == ' ') nTok += 1; i += 1 }
+      val starts = new Array[Int](nTok)
+      var t = 1
+      i = 0
       while (i < len) {
-        if (text.charAt(i) == ' ') starts += i + 1
+        if (text.charAt(i) == ' ') { starts(t) = i + 1; t += 1 }
         i += 1
       }
-      val nTok = starts.length
-      var t = 0
+      val out = new Array[Long](math.max(nTok - n + 1, 0))
+      t = 0
       while (t + n <= nTok) {
-        val from = starts(t)
         val until = if (t + n < nTok) starts(t + n) - 1 else len
-        set.add(fnv1a(text, from, until))
+        out(t) = fnv1a(text, starts(t), until)
         t += 1
       }
+      out
     } else {
+      val out = new Array[Long](math.max(len - n + 1, 0))
       var i = 0
-      while (i + n <= text.length) {
-        set.add(fnv1a(text, i, i + n))
+      while (i + n <= len) {
+        out(i) = fnv1a(text, i, i + n)
         i += 1
       }
+      out
     }
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
+    java.util.Arrays.sort(hashes)
+    var distinct = 0
     var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    new GenericArrayData(out)
+    while (i < hashes.length) {
+      if (distinct == 0 || hashes(i) != hashes(distinct - 1)) {
+        hashes(distinct) = hashes(i)
+        distinct += 1
+      }
+      i += 1
+    }
+    // GenericArrayData would box every element again
+    UnsafeArrayData.fromPrimitiveArray(hashes, Platform.LONG_ARRAY_OFFSET, distinct, 8)
   }
 
   override protected def nullSafeEval(input: Any): Any =

@@ -3,7 +3,12 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, Filter, Join, LeafNode,
+  LogicalPlan, Project, ResolvedHint, SubqueryAlias, Union}
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.sources.Tables
 
 /** Structured-Streaming ingest of the `events` table — the Spark-native
   * analogue of reader's CDC tailing loops (reference:
@@ -30,19 +35,26 @@ object EventsIngest {
       spark: SparkSession,
       eventsPath: String,
       landingDir: String,
-      checkpointDir: String): Long = {
+      checkpointDir: String): Long =
+    ingest(spark, eventsPath, landingDir, checkpointDir).count()
+
+  private def ingest(
+      spark: SparkSession,
+      eventsPath: String,
+      landingDir: String,
+      checkpointDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsPath).schema
+    val schema = Tables.read(spark, eventsPath).schema
     val stream = fileStream(spark, eventsPath, schema)
       // normalize whatever physical ts type this testdata generation
       // carries to the canonical epoch-nanos long, so the landed schema
       // (and everything downstream of it) is generation-agnostic
-      .withColumn("ts", graft.sources.Tables.tsNanos(schema("ts").dataType))
+      .withColumn("ts", Tables.tsNanos(schema("ts").dataType))
       // envelope the raw change rows exactly as the batch path does:
       // op 'r' + event-time millis (transformer.go:121)
       .withColumn("op", lit("r"))
       .withColumn("ts_ms", expr("ts div 1000000"))
-    runToParquet(stream, landingDir, checkpointDir).count()
+    runToParquet(stream, landingDir, checkpointDir)
   }
 
   /** Replay-safe ingest: the same source data delivered MORE THAN ONCE
@@ -85,8 +97,7 @@ object EventsIngest {
     val ckpt = s"$workDir/ckpt"
     deleteRecursive(landing)
     deleteRecursive(ckpt)
-    ingestAvailableNow(spark, eventsPath, landing, ckpt)
-    spark.read.parquet(landing)
+    ingest(spark, eventsPath, landing, ckpt)
   }
 
   /** Stream a parquet table path. FileStreamSource wants a directory: a
@@ -114,9 +125,8 @@ object EventsIngest {
     }
   }
 
-  /** Run one streaming query's start-to-finish `f` with two session keys
-    * scoped to it, restoring each after (or unsetting it, if it had no
-    * session value), also when `f` throws.
+  /** Run a foreachBatch query's start-to-finish `f` with two session keys
+    * scoped to it (see [[scoped]]):
     *
     * `spark.sql.shuffle.partitions` is set to the STATE partition count,
     * `SPARK_GRAFT_STREAM_STATE_PARTITIONS` or 8. Stateful operators
@@ -126,8 +136,9 @@ object EventsIngest {
     * the checkpoint at first start; so it is sized to state volume (keys per
     * watermark horizon), not to the session's core count, which charged
     * every micro-batch a fan of near-empty commits (stream_ttl_dedup ran
-    * 6.9 s at 8 cores and 13.8 s at 32). foreachBatch loops get the same
-    * scope: their keyed shuffles carry one micro-batch of rows.
+    * 6.9 s at 8 cores and 13.8 s at 32). foreachBatch loops get it whatever
+    * their plan: their keyed shuffles carry one micro-batch of rows.
+    * [[runToParquet]] scopes it only to a plan that holds state.
     *
     * `fs.AbstractFileSystem.file.impl` is set to [[LocalCheckpointFs]].
     * Spark copies the session conf into every Hadoop conf it builds for the
@@ -136,13 +147,20 @@ object EventsIngest {
     * on each call, so every local checkpoint file skips Hadoop's
     * `chmod`/`readlink` subprocesses. The key names only the `file` scheme:
     * HDFS and object-store checkpoints keep their own file systems. */
-  private[graft] def withStreamingScope[T](spark: SparkSession)(f: => T): T = {
-    val scoped = Seq(
-      "spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"),
-      "fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName)
-    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+  private[graft] def withStreamingScope[T](spark: SparkSession)(f: => T): T =
+    scoped(spark, statePartitions ++ checkpointFs)(f)
+
+  private def statePartitions = Seq("spark.sql.shuffle.partitions" ->
+    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+
+  private def checkpointFs =
+    Seq("fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName)
+
+  /** Run `f` with the session keys `conf` set, restoring each after (or
+    * unsetting it, if it had no session value), also when `f` throws. */
+  private def scoped[T](spark: SparkSession, conf: Seq[(String, String)])(f: => T): T = {
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
     // restore only after the blocking run completes: streams clone the
     // session conf on their own thread, so restoring right after start()
     // would race the clone
@@ -152,15 +170,54 @@ object EventsIngest {
     }
   }
 
+  /** One entry per stateful operator in a streaming query's analyzed plan:
+    * true for an inner stream-stream join. A streaming node not known to
+    * be stateless counts as stateful and not inner, so an unknown operator
+    * keeps the conservative scope. */
+  private def statefulOps(plan: LogicalPlan): Seq[Boolean] = plan.collect {
+    case j: Join if j.left.isStreaming && j.right.isStreaming => j.joinType == Inner
+    case n if n.isStreaming && !stateless(n) => false
+  }
+
+  private def stateless(n: LogicalPlan): Boolean = n match {
+    case _: LeafNode | _: Project | _: Filter | _: EventTimeWatermark | _: SubqueryAlias
+        | _: Union | _: ResolvedHint | _: Join => true // a stream-static join keeps no state
+    case _ => false
+  }
+
   /** Run `stream` to a parquet landing zone with AvailableNow + checkpoint,
-    * block to completion, and return the landed data. Shared by the
-    * streaming ingests. */
+    * block to completion, and return the landed data, read with the
+    * stream's own schema: no inference job, and a run that landed nothing
+    * reads back as an empty frame. Shared by the streaming ingests.
+    *
+    * The query's analyzed plan decides its scope. Every query gets
+    * [[LocalCheckpointFs]]; a plan that holds a stateful operator also gets
+    * the state partition count (see [[withStreamingScope]]); a stateless
+    * one keeps the session's. When every stateful operator is an INNER
+    * stream-stream join, `spark.sql.streaming.noDataMicroBatches.enabled`
+    * is off for the query: the no-data micro-batch that AvailableNow
+    * otherwise ends on only advances the watermark and evicts join state,
+    * and an inner join emits nothing at eviction. The eviction is deferred,
+    * not lost: the run commits the advanced watermark, and a restart from
+    * the checkpoint evicts in its first batch. Every other stateful query
+    * keeps the batch. Outer joins, append-mode aggregation, group-state
+    * timeouts and session windows emit at eviction; dedup emits nothing
+    * then, but a dedup state hit drops a row without re-checking its
+    * expiry, so deferring eviction to the next run could change what a
+    * restarted run emits. */
   private[streaming] def runToParquet(
       stream: DataFrame,
       landingDir: String,
       checkpointDir: String,
       outputMode: Option[org.apache.spark.sql.streaming.OutputMode] = None): DataFrame = {
-    withStreamingScope(stream.sparkSession) {
+    val spark = stream.sparkSession
+    val ops = statefulOps(stream.queryExecution.analyzed)
+    val conf = checkpointFs ++
+      (if (ops.nonEmpty) statePartitions else Nil) ++
+      (if (ops.nonEmpty && ops.forall(identity))
+        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Nil)
+    scoped(spark, conf) {
       val writer = stream.writeStream
         .format("parquet")
         .option("path", landingDir)
@@ -169,7 +226,7 @@ object EventsIngest {
       val q = outputMode.fold(writer)(writer.outputMode).start()
       q.awaitTermination()
     }
-    stream.sparkSession.read.parquet(landingDir)
+    spark.read.schema(stream.schema).parquet(landingDir)
   }
 
   /** Shared by the streaming ingests (EvolvingIngest, WatermarkAgg). */

@@ -31,10 +31,9 @@ object StreamEnrich {
     EventsIngest.deleteRecursive(landing)
     EventsIngest.deleteRecursive(ckpt)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsPath).schema
+    val schema = graft.sources.Tables.read(spark, eventsPath).schema
     val stream = prep(EventsIngest.fileStream(spark, eventsPath, schema))
       .join(broadcast(dim), joinCols)
     EventsIngest.runToParquet(stream, landing, ckpt)
-    spark.read.parquet(landing)
   }
 }

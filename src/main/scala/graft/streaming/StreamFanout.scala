@@ -27,7 +27,7 @@ object StreamFanout {
       eventsPath: String,
       workDir: String): (DataFrame, DataFrame) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsPath).schema
+    val schema = graft.sources.Tables.read(spark, eventsPath).schema
     val rawDir = s"$workDir/raw"
     val aggDir = s"$workDir/agg"
     val ckpt = s"$workDir/ckpt"

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream interval join: correlate two live CDC streams on a key
   * within an event-time window — the streaming twin of [[graft.operators
@@ -22,6 +21,14 @@ import org.apache.spark.sql.streaming.Trigger
   * emits every matched pair exactly once regardless of micro-batch
   * boundaries — late-batch rows join against retained state — so under
   * `AvailableNow` the emitted set equals the batch interval join verbatim.
+  * An inner run ends on its last DATA batch: the trailing no-data batch
+  * would only advance the watermark and evict state, emitting nothing, so
+  * [[EventsIngest.runToParquet]] skips it. The eviction of the last batch's
+  * expired state happens at the next run's first batch from the same
+  * checkpoint, which starts from the watermark this run committed; rows
+  * behind that watermark are late there, as they would have been after
+  * the skipped batch. The outer variants keep the batch: they emit their
+  * null-extended rows at eviction.
   */
 object StreamJoin {
 
@@ -77,11 +84,21 @@ object StreamJoin {
       workDir: String,
       window: String,
       joinType: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsPath).schema
     val landing = s"$workDir/landing"
     val ckpt = s"$workDir/ckpt"
     EventsIngest.deleteRecursive(landing); EventsIngest.deleteRecursive(ckpt)
+    EventsIngest.runToParquet(joined(spark, eventsPath, window, joinType), landing, ckpt)
+  }
+
+  /** The streaming interval join of `eventsPath`'s clicks to the same
+    * user's purchases at most `window` before them. */
+  private[streaming] def joined(
+      spark: SparkSession,
+      eventsPath: String,
+      window: String,
+      joinType: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema = graft.sources.Tables.read(spark, eventsPath).schema
 
     def side(evType: String, prefix: String) =
       EventsIngest.fileStream(spark, eventsPath, schema)
@@ -91,10 +108,8 @@ object StreamJoin {
         col("event_id").as(s"${prefix}_id"))
       .withWatermark(s"${prefix}_ts", window)
 
-    val joined = side("click", "c").join(side("purchase", "p"),
+    side("click", "c").join(side("purchase", "p"),
       expr(s"c_user = p_user AND p_ts BETWEEN c_ts - INTERVAL $window AND c_ts"),
       joinType)
-
-    EventsIngest.runToParquet(joined, landing, ckpt)
   }
 }

@@ -41,7 +41,7 @@ object WatermarkAgg {
       workDir: String,
       delay: String = "1 hour"): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsPath).schema
+    val schema = graft.sources.Tables.read(spark, eventsPath).schema
     val landing = s"$workDir/landing"
     val ckpt = s"$workDir/ckpt"
     EventsIngest.deleteRecursive(landing); EventsIngest.deleteRecursive(ckpt)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.expressions._
@@ -29,6 +31,37 @@ class KernelEquivalenceSpec extends AnyFunSuite {
       size(Sketch.column(ShingleHashes(Sketch.expr(col("text")), 3, word = false))).as("fast"))
       .where(col("ref") =!= col("fast")).count()
     assert(bad === 0)
+  }
+
+  test("ShingleHashes equals a sorted-set reference on random, empty, short and repetitive texts") {
+    def fnv1a(s: String): Long =
+      s.foldLeft(0xcbf29ce484222325L)((h, c) => (h ^ c) * 0x100000001b3L)
+    def reference(text: String, n: Int, word: Boolean): Seq[Long] = {
+      val shingles =
+        if (word) text.split(" ", -1).toSeq.sliding(n).filter(_.size == n).map(_.mkString(" "))
+        else (0 to text.length - n).iterator.map(i => text.substring(i, i + n))
+      val set = new java.util.TreeSet[java.lang.Long]()
+      shingles.foreach(s => set.add(fnv1a(s)))
+      set.asScala.toSeq.map(_.longValue)
+    }
+    val rnd = new scala.util.Random(4177L)
+    val vocab = Vector("a", "bb", "c", "", "dé", "a b")
+    val random = Seq.fill(200)(Seq.fill(rnd.nextInt(40))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val texts = Seq("", "x", "ab", "one two", "la la la la la la", "abababababab", "  ") ++ random
+    val cases = for (t <- texts; n <- Seq(1, 2, 3, 5); word <- Seq(true, false)) yield (t, n, word)
+    cases.foreach { case (t, n, word) =>
+      val got = ShingleHashes(Sketch.expr(lit(t)), n, word)
+        .compute(org.apache.spark.unsafe.types.UTF8String.fromString(t)).toLongArray().toSeq
+      assert(got === reference(t, n, word), s"text='$t' n=$n word=$word")
+    }
+    // and through a generated projection
+    import spark.implicits._
+    val df = texts.toDF("text")
+    for (word <- Seq(true, false)) {
+      val got = df.select(col("text"), Sketch.column(ShingleHashes(Sketch.expr(col("text")), 3, word)))
+        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+      texts.foreach(t => assert(got(t) === reference(t, 3, word), s"text='$t' word=$word"))
+    }
   }
 
   test("SimHash16 kernel equals the HOF simhash16 on md5 token hashes") {
