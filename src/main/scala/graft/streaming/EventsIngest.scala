@@ -125,20 +125,39 @@ object EventsIngest {
     }
   }
 
-  /** Run a foreachBatch query's start-to-finish `f` with two session keys
-    * scoped to it (see [[scoped]]):
+  /** Run a foreachBatch query's start-to-finish `f` in the session scope
+    * that every graft stream runs in: its session keys are set for `f` and
+    * restored after it (see [[scoped]]). A streaming query clones the
+    * session when it starts, so the clone, and every micro-batch it plans,
+    * sees these values.
     *
-    * `spark.sql.shuffle.partitions` is set to the STATE partition count,
-    * `SPARK_GRAFT_STREAM_STATE_PARTITIONS` or 8. Stateful operators
+    * `spark.sql.shuffle.partitions` is set to the STATE partition count:
+    * `SPARK_GRAFT_STREAM_STATE_PARTITIONS`, or else 8 capped at the
+    * context's default parallelism. Stateful operators
     * (dropDuplicates[WithinWatermark], stream-stream joins, watermarked
-    * aggregation) keep one state store per shuffle partition, write one
-    * delta and commit file per store per micro-batch, and pin the count into
-    * the checkpoint at first start; so it is sized to state volume (keys per
-    * watermark horizon), not to the session's core count, which charged
-    * every micro-batch a fan of near-empty commits (stream_ttl_dedup ran
-    * 6.9 s at 8 cores and 13.8 s at 32). foreachBatch loops get it whatever
-    * their plan: their keyed shuffles carry one micro-batch of rows.
-    * [[runToParquet]] scopes it only to a plan that holds state.
+    * aggregation) keep one state store per shuffle partition and write one
+    * delta and commit file per store per micro-batch, so the count is sized
+    * to state volume (keys per watermark horizon), not to the core count:
+    * at 32 cores a core-count fan of near-empty commits ran
+    * stream_ttl_dedup in 13.8 s against 6.9 s at 8. Below 8 cores the cap
+    * keeps every store of a micro-batch in one task wave. Spark pins the
+    * count into the checkpoint when the query first starts, and a restart
+    * keeps the pinned count whatever the default says then; so a cluster
+    * whose parallelism changes while it runs (dynamic allocation) should
+    * set the override. foreachBatch loops get the count whatever their
+    * plan: their keyed shuffles carry one micro-batch of rows.
+    * [[runToParquet]] sets it only for a plan that holds state.
+    *
+    * `spark.sql.artifact.isolation.enabled` is set to false unless the
+    * session holds session artifacts (jars or Python includes added to
+    * it). Each clone with isolation gets its own artifact session: its
+    * executors build a new class loader for it, and the code-generation
+    * cache is keyed by class loader, so every run recompiled the classes of
+    * the run before, and fetched the missing ones from the driver over RPC.
+    * The clone reads the key when it is made and then runs in the caller's
+    * default class-loading scope, where generated classes compile once per
+    * JVM. A session with its own artifacts keeps isolation, so a UDF from
+    * a session jar still loads.
     *
     * `fs.AbstractFileSystem.file.impl` is set to [[LocalCheckpointFs]].
     * Spark copies the session conf into every Hadoop conf it builds for the
@@ -148,18 +167,27 @@ object EventsIngest {
     * `chmod`/`readlink` subprocesses. The key names only the `file` scheme:
     * HDFS and object-store checkpoints keep their own file systems. */
   private[graft] def withStreamingScope[T](spark: SparkSession)(f: => T): T =
-    scoped(spark, statePartitions ++ checkpointFs)(f)
+    scoped(spark, statePartitions(spark) ++ sessionScope(spark))(f)
 
-  private def statePartitions = Seq("spark.sql.shuffle.partitions" ->
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+  private def statePartitions(spark: SparkSession) = Seq("spark.sql.shuffle.partitions" ->
+    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS",
+      math.min(8, spark.sparkContext.defaultParallelism).toString))
 
-  private def checkpointFs =
-    Seq("fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName)
+  /** The keys every streaming query is scoped with, stateful or not. */
+  private def sessionScope(spark: SparkSession) = {
+    val artifacts = spark.sessionState.artifactManager
+    val shared = if (artifacts.getAddedJars.isEmpty && artifacts.getPythonIncludes.isEmpty)
+      Seq("spark.sql.artifact.isolation.enabled" -> "false") else Nil
+    shared :+ ("fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName)
+  }
 
   /** Run `f` with the session keys `conf` set, restoring each after (or
     * unsetting it, if it had no session value), also when `f` throws. */
   private def scoped[T](spark: SparkSession, conf: Seq[(String, String)])(f: => T): T = {
-    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val session = spark.sessionState.conf
+    val prev = conf.map { case (k, _) =>
+      k -> Option.when(session.contains(k))(session.getConfString(k))
+    }
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
     // restore only after the blocking run completes: streams clone the
     // session conf on their own thread, so restoring right after start()
@@ -190,10 +218,13 @@ object EventsIngest {
     * stream's own schema: no inference job, and a run that landed nothing
     * reads back as an empty frame. Shared by the streaming ingests.
     *
-    * The query's analyzed plan decides its scope. Every query gets
-    * [[LocalCheckpointFs]]; a plan that holds a stateful operator also gets
-    * the state partition count (see [[withStreamingScope]]); a stateless
-    * one keeps the session's. When every stateful operator is an INNER
+    * The query runs in the session scope of [[withStreamingScope]], and
+    * its analyzed plan decides which keys of it apply. Every query gets
+    * [[LocalCheckpointFs]] and, unless the session holds its own
+    * artifacts, the caller's class-loading scope, so a rerun reuses the
+    * classes the last run compiled. A plan that holds a stateful operator
+    * also gets the state partition count; a stateless one keeps the
+    * session's. When every stateful operator is an INNER
     * stream-stream join, `spark.sql.streaming.noDataMicroBatches.enabled`
     * is off for the query: the no-data micro-batch that AvailableNow
     * otherwise ends on only advances the watermark and evicts join state,
@@ -212,8 +243,8 @@ object EventsIngest {
       outputMode: Option[org.apache.spark.sql.streaming.OutputMode] = None): DataFrame = {
     val spark = stream.sparkSession
     val ops = statefulOps(stream.queryExecution.analyzed)
-    val conf = checkpointFs ++
-      (if (ops.nonEmpty) statePartitions else Nil) ++
+    val conf = sessionScope(spark) ++
+      (if (ops.nonEmpty) statePartitions(spark) else Nil) ++
       (if (ops.nonEmpty && ops.forall(identity))
         Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
       else Nil)

@@ -181,27 +181,35 @@ class PipelineSpec extends AnyFunSuite {
 
   test("streaming scope restores the session keys it sets, also when its body throws") {
     val impl = "fs.AbstractFileSystem.file.impl"
-    val keys = Seq("spark.sql.shuffle.partitions", impl)
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val keys = Seq("spark.sql.shuffle.partitions", impl, isolation)
     def session() = keys.map(spark.conf.getOption)
     val before = session()
     assert(before(1).isEmpty, s"$impl is set in the test session")
+    // the isolation key has a default, so `before` reads it either way
+    def restored() = {
+      assert(session() === before)
+      assert(!spark.sessionState.conf.contains(isolation), s"$isolation was left set")
+    }
+    restored()
 
     EventsIngest.freshIngest(spark, s"$Sf/events.parquet",
       Files.createTempDirectory("scope").toString)
-    assert(session() === before)
+    restored()
 
     EventsIngest.withStreamingScope(spark) {
       val fc = FileContext.getFileContext(
         Files.createTempDirectory("scope").toUri, spark.sessionState.newHadoopConf())
       assert(fc.getDefaultFileSystem.isInstanceOf[LocalCheckpointFs])
-      assert(spark.conf.get(keys(0)) ===
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+      assert(spark.conf.get(keys(0)) === sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS",
+        math.min(8, spark.sparkContext.defaultParallelism).toString))
+      assert(spark.conf.get(isolation) === "false")
     }
-    assert(session() === before)
+    restored()
 
     intercept[IllegalStateException](
       EventsIngest.withStreamingScope(spark)(throw new IllegalStateException("body failed")))
-    assert(session() === before)
+    restored()
 
     // a key that had a session value gets that value back
     spark.conf.set(impl, classOf[LocalFs].getName)
@@ -209,6 +217,6 @@ class PipelineSpec extends AnyFunSuite {
       EventsIngest.withStreamingScope(spark)(())
       assert(spark.conf.getOption(impl) === Some(classOf[LocalFs].getName))
     } finally spark.conf.unset(impl)
-    assert(session() === before)
+    restored()
   }
 }

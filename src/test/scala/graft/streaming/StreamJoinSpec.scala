@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.graftshim.ListenerBus
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,8 +18,9 @@ import graft.sources.Tables
 /** The stream-stream interval join against its batch twin: the inner join
   * lands the batch interval join in one micro-batch (no eviction-only
   * batch), a run resumed from the checkpoint completes it exactly once,
-  * the outer variant still runs its eviction batch, and an empty stream
-  * lands as an empty frame. */
+  * also when the checkpoint pinned another state partition count than the
+  * default, the outer variant still runs its eviction batch, and an empty
+  * stream lands as an empty frame. */
 class StreamJoinSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -110,6 +111,49 @@ class StreamJoinSpec extends AnyFunSuite {
     assert(got.toSet === want.toSet)
   }
 
+  test("a checkpoint written under 8 state partitions resumes exactly once under the default") {
+    val raw = Tables.read(spark, events)
+    val want = rows(oracle(raw))
+    val ts = Tables.tsTimestamp(raw.schema("ts").dataType)
+    // a pair whose purchase precedes the cut joins against the pinned state
+    val crossing = want.filter(r => r.getTimestamp(4).before(r.getTimestamp(1)))
+      .sortBy(_.getTimestamp(1).getTime)
+    val cut = crossing(crossing.size / 2).getTimestamp(1)
+    // on this session the default is below 8, so the resume runs under a
+    // count other than the one the checkpoint pinned
+    assert(spark.sparkContext.defaultParallelism < 8)
+
+    val dir = work("repartition")
+    val (staged, landing, ckpt) = (s"$dir/events", s"$dir/landing", s"$dir/ckpt")
+    def join() = StreamJoin.joined(spark, staged, "1 hour", "inner")
+    def stateParts() = {
+      val s = Files.list(Paths.get(ckpt, "state", "0"))
+      try s.iterator().asScala.map(_.getFileName.toString).filter(_.forall(_.isDigit)).toSet
+      finally s.close()
+    }
+    val eight = (0 until 8).map(_.toString).toSet
+    raw.where(ts < lit(cut)).coalesce(1).write.parquet(staged)
+    // the first run starts the query as the former default of 8 did
+    withShufflePartitions(8) {
+      join().writeStream
+        .format("parquet")
+        .option("path", landing)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
+    assert(stateParts() === eight)
+    val first = rows(spark.read.schema(join().schema).parquet(landing))
+
+    raw.where(ts >= lit(cut)).coalesce(1).write.mode("append").parquet(staged)
+    val (got, resumedIds) = batches(rows(EventsIngest.runToParquet(join(), landing, ckpt)))
+
+    assert(resumedIds.nonEmpty && first.nonEmpty && first.size < got.size)
+    assert(got.size === want.size, "duplicated or lost pairs")
+    assert(got.toSet === want.toSet)
+    assert(stateParts() === eight, "the checkpoint keeps its count")
+  }
+
   test("the left-outer join still runs its eviction batch and emits null-extended clicks") {
     val (landed, ids) =
       batches(StreamJoin.clicksWithRecentPurchasesOuter(spark, events, work("outer")))
@@ -133,7 +177,7 @@ class StreamJoinSpec extends AnyFunSuite {
 
   test("an empty stream lands and reads back as an empty frame with the stream's schema") {
     val dir = work("empty")
-    val input = Files.createDirectories(java.nio.file.Paths.get(dir, "events")).toString
+    val input = Files.createDirectories(Paths.get(dir, "events")).toString
     val schema = Tables.read(spark, events).schema
     def side(evType: String, prefix: String) = spark.readStream.schema(schema).parquet(input)
       .where(col("event_type") === evType)
