@@ -4358,9 +4358,9 @@ object SparkEntry {
       // same regime), minPts = 4 (core ⇔ ≥ 3 neighbors + self). The
       // 100 TB shape end to end: ε-pairs from SpatialGrid.pairsWithin's
       // half-neighborhood grid equi-join (never all-pairs), core flags
-      // from ONE keyed neighbor count, clusters = the existing
-      // large/small-star CC closure over CORE-CORE pairs only (the
-      // vanishing-fraction pair graph, O(log d) rounds), border points
+      // from ONE keyed neighbor count, clusters = connected components
+      // over CORE-CORE pairs only (the vanishing-fraction pair graph,
+      // O(log n) rounds on the fixpoint engine), border points
       // assigned to their MIN core-neighbor's cluster (the deterministic
       // tie-break DBSCAN leaves unspecified), everything exact integers.
       // Output: per-cluster census (n_core, n_border, n_total) plus the
@@ -4845,12 +4845,12 @@ object SparkEntry {
     "dedup_clusters" -> { (s, dir) =>
       // transitive closure of the near-dup pair graph: LSH emits pairs,
       // survivor selection needs clusters (A~B, B~C => {A,B,C} keep one).
-      // Alternating large/small-star pointer doubling over the pair graph
-      // only — a vanishing fraction of the corpus, O(log diameter) rounds
-      // so even adversarial boilerplate chains converge; the oracle
-      // computes the same closure with a recursive CTE.
+      // Connected components over the pair graph only — a vanishing
+      // fraction of the corpus, O(log n) rounds on the fixpoint engine so
+      // even adversarial boilerplate chains converge; the oracle computes
+      // the same closure with a recursive CTE.
       val pairs = Dedup.minhashNearDupPairs(Tables.documents(s, dir), "doc_id", "text")
-      Dedup.connectedComponentsStar(pairs, "id_a", "id_b")
+      Dedup.connectedComponents(pairs, "id_a", "id_b")
         .select(col("v").as("doc_id"), col("cluster").as("cluster_id"),
           (col("v") === col("cluster")).as("is_rep"))
         .orderBy("doc_id")
@@ -4863,7 +4863,7 @@ object SparkEntry {
       // NEW edges without recomputing closure over the old graph). The
       // persisted state is the (node → root) component table; a delta
       // edge CONTRACTS through it (endpoint → its root, self for unseen
-      // nodes), star CC runs over the contracted ROOT graph only — a
+      // nodes), CC runs over the contracted ROOT graph only — a
       // vanishing fraction of the corpus graph — and the final
       // assignment is one keyed map of old roots to new. Correctness
       // argument: each base root is the min id of its component, so the
@@ -4877,7 +4877,7 @@ object SparkEntry {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val base = pairs.where(col("id_a") % 5 =!= 1 && col("id_b") % 5 =!= 1)
       val delta = pairs.where(col("id_a") % 5 === 1 || col("id_b") % 5 === 1)
-      val baseCC = Dedup.connectedComponentsStar(base, "id_a", "id_b")
+      val baseCC = Dedup.connectedComponents(base, "id_a", "id_b")
         .select(col("v"), col("cluster"))
       val contracted = delta
         .join(baseCC.select(col("v").as("id_a"), col("cluster").as("ra0")), Seq("id_a"), "left")
@@ -4885,7 +4885,7 @@ object SparkEntry {
         .select(coalesce(col("ra0"), col("id_a")).as("ra"),
           coalesce(col("rb0"), col("id_b")).as("rb"))
         .where(col("ra") =!= col("rb"))
-      val rootMap = Dedup.connectedComponentsStar(contracted, "ra", "rb")
+      val rootMap = Dedup.connectedComponents(contracted, "ra", "rb")
         .select(col("v").as("r"), col("cluster").as("new_root"))
       val deltaNodes = delta.select(col("id_a").as("v"))
         .unionByName(delta.select(col("id_b").as("v"))).distinct()
@@ -4905,7 +4905,7 @@ object SparkEntry {
       // The curation endgame the cluster table exists FOR: keep the
       // HIGHEST-QUALITY member of every near-dup cluster, not the min-id
       // one (production semantics: among boilerplate variants keep the
-      // cleanest). LSH pairs -> star-CC clusters -> quality score ->
+      // cleanest). LSH pairs -> CC clusters -> quality score ->
       // per-cluster argmax (quality desc, doc_id tiebreak). Shape at
       // 100 TB: clusters live on the PAIR graph only; quality is map-only;
       // the final window partitions by cluster (near-dup clusters are
@@ -4916,7 +4916,7 @@ object SparkEntry {
       import graft.expressions.{Sketch, TokenStats}
       val docs = Tables.documents(s, dir)
       val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text")
-      val clusters = Dedup.connectedComponentsStar(pairs, "id_a", "id_b")
+      val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .select(col("v").as("doc_id"), col("cluster").as("cl"))
       val nTok = element_at(col("st"), 1)
       val nUniq = element_at(col("st"), 2)
@@ -6122,7 +6122,7 @@ object SparkEntry {
     "link_golden" -> { (s, dir) =>
       // Golden-record construction — the survivorship step of master-data
       // management that entity resolution exists FOR: once near-duplicate
-      // records are clustered (the SAME LSH pair graph + star-CC closure
+      // records are clustered (the SAME LSH pair graph + CC closure
       // as dedup_clusters/sample_split_grouped — one resolution, many
       // consumers), each cluster merges to ONE golden record with
       // field-level survivorship: per field the MODAL value with a
@@ -6138,7 +6138,7 @@ object SparkEntry {
       // never shuffle.
       val docs = Tables.documents(s, dir)
       val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text")
-      val clusters = Dedup.connectedComponentsStar(pairs, "id_a", "id_b")
+      val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .select(col("v").as("doc_id"), col("cluster").as("cluster_id"))
       val members = docs.join(clusters, Seq("doc_id"))
         .select(col("doc_id"), col("cluster_id"), col("lang"), col("source"),
@@ -8523,9 +8523,9 @@ object SparkEntry {
 
     "graph_triangles" -> { (s, dir) =>
       // Triangle census over the word-adjacency graph (the third graph
-      // operator after star CC and weighted PageRank — triangle counts
-      // drive clustering coefficients, community strength, and spam-graph
-      // signals). Algorithm is the DEGREE-ORDERED orientation count
+      // operator after connected components and weighted PageRank —
+      // triangle counts drive clustering coefficients, community strength,
+      // and spam-graph signals). Algorithm is the DEGREE-ORDERED orientation count
       // (Chiba–Nishizeki / the MapReduce standard): orient every edge
       // from its lower-degree endpoint (lex tiebreak), build wedges only
       // from out-neighbors, close them against the undirected edge set —
@@ -8827,7 +8827,7 @@ object SparkEntry {
       // document — a near-duplicate of a training doc landing in test is
       // evaluation leakage, the exact failure mode document-keyed hash
       // splits (sample_split) cannot prevent. Cluster ids come from the
-      // same LSH pair graph + star CC as dedup_survivors; singletons
+      // same LSH pair graph + CC as dedup_survivors; singletons
       // split by their own id, so assignment matches sample_split
       // wherever no near-dup exists. Shape at 100 TB: clusters live on
       // the pair graph only; the corpus pays one keyed left join plus a
@@ -8835,7 +8835,7 @@ object SparkEntry {
       import graft.operators.Sampling
       val docs = Tables.documents(s, dir)
       val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text")
-      val clusters = Dedup.connectedComponentsStar(pairs, "id_a", "id_b")
+      val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .select(col("v").as("doc_id"), col("cluster").as("cl"))
       docs.join(clusters, Seq("doc_id"), "left")
         .withColumn("cluster_id", coalesce(col("cl"), col("doc_id")))
@@ -10705,7 +10705,7 @@ FROM rl r, br b ORDER BY r.score"""
 
     // definitional DBSCAN: brute-force eps-pairs, HAVING-count cores,
     // recursive-CTE reachability closure over core-core edges with
-    // MIN-label canonicalization (= the star-CC cluster id), min-cluster
+    // MIN-label canonicalization (= the CC cluster id), min-cluster
     // border assignment, census + the -1 noise row
     "ml_dbscan" ->
       """WITH RECURSIVE c AS (SELECT COUNT(*) AS n FROM customer),

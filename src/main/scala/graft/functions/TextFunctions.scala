@@ -4,8 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis building blocks for the LLM-training-data pipeline:
-  * tokenization, shingling, deterministic 60-bit hashing, MinHash
-  * signatures, SimHash fingerprints, language-ID and quality heuristics.
+  * tokenization, shingling, deterministic 60-bit hashing, LSH band keys,
+  * SimHash fingerprints, language-ID and quality heuristics. MinHash
+  * signatures are the native [[graft.expressions.MinHashSig]] kernel.
   *
   * Everything here is a pure Column expression (no UDFs): whole-stage
   * codegen keeps these inside the scan loop, which is what makes the dedup
@@ -13,8 +14,7 @@ import org.apache.spark.sql.functions._
   * a single pass over the data with no shuffle.
   *
   * Hash determinism: content hashes are derived from md5 hex (bit-identical
-  * between Spark and the DuckDB oracle); MinHash permutations use 30-bit
-  * multipliers so `a*x + b` stays far below 2^63 (no ANSI overflow).
+  * between Spark and the DuckDB oracle).
   */
 object TextFunctions {
 
@@ -48,41 +48,6 @@ object TextFunctions {
   // route through the SQL function for a dynamic start.
   private def substring(c: Column, pos: Column, len: Column): Column =
     call_function("substring", c, pos, len)
-
-  private val MersennePrime31 = 2147483647L // 2^31 - 1
-
-  /** Deterministic splitmix64 step — used only to derive the MinHash
-    * permutation constants at plan-build time (never executed per row). */
-  private def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d9669b529ccf12L
-    z ^ (z >>> 31)
-  }
-
-  private def permConstants(numPerm: Int): (Seq[Long], Seq[Long]) = {
-    val a = (0 until numPerm).map(i => (splitmix64(2 * i).abs % ((1L << 30) - 1)) + 1)
-    val b = (0 until numPerm).map(i => splitmix64(2 * i + 1).abs % MersennePrime31)
-    (a, b)
-  }
-
-  /** MinHash signature: for each of `numPerm` permutations, the minimum of
-    * `(a_i * h(s) + b_i) mod p` over the document's shingle hashes.
-    * One narrow array column per doc — the signature is what shuffles in
-    * LSH, not the text, which is the 100 TB play: shuffle bytes per doc drop
-    * from the full document to numPerm * 8. */
-  def minhashSignature(shingleHashes: Column, numPerm: Int): Column = {
-    val (a, b) = permConstants(numPerm)
-    val aLit = typedlit(a)
-    val bLit = typedlit(b)
-    val x30 = transform(shingleHashes, x => pmod(x, lit(1L << 30)))
-    transform(
-      sequence(lit(0), lit(numPerm - 1)),
-      i =>
-        array_min(transform(x30, x =>
-          pmod(element_at(aLit, i + 1) * x + element_at(bLit, i + 1),
-            lit(MersennePrime31)))))
-  }
 
   /** LSH band keys: hash `numBands` contiguous slices of the signature.
     * Docs sharing any band hash become candidate pairs (banding amplifies
@@ -122,10 +87,6 @@ object TextFunctions {
   /** 60-bit integer fingerprint (for joins/bucketing — 8 bytes instead of a
     * 32-char string at shuffle time). */
   def fingerprint60(c: Column): Column = hash60(normalized(c))
-
-  /** Tokens matching a stopword list, duplicates counted. */
-  def stopwordHits(toks: Column, stops: Seq[String]): Column =
-    size(filter(toks, t => t.isin(stops: _*))).cast("long")
 
   val EnStops: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on")
   val EsStops: Seq[String] = Seq("el", "la", "de", "y", "en", "que", "los", "un")

@@ -25,11 +25,6 @@ object VectorFunctions {
   /** Cosine similarity; inputs must already be array<double>. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm2(a) * norm2(b))
 
-  /** Cosine from a precomputed-norm pair — the form the operators use so the
-    * corpus norms are computed once per vector, not once per pair. */
-  def cosineWithNorms(a: Column, b: Column, normA: Column, normB: Column): Column =
-    dot(a, b) / (normA * normB)
-
   /** Sign-random-projection code bits for hyperplane LSH: bit j is the sign
     * of <v, H_j> where H_j is a deterministic ±1 hyperplane derived from
     * splitmix64. Returns an array of `numPlanes` 0/1 longs.

@@ -56,7 +56,7 @@ object CacheScope {
     * hold its blocks (and its listener registration) for the session's
     * life. Stale scopes are swept on the next unpersistAfterUse call —
     * amortized cleanup, no background thread. */
-  private val staleTtlMs: Long = sys.env.getOrElse("GRAFT_CACHE_TTL_MS", "600000").toLong
+  private val staleTtlMs: Long = 600000L
 
   private def sweepStale(): Unit = {
     val now = System.currentTimeMillis()

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *    all-pairs frame;
   *  - core flags are ONE keyed neighbor count (core ⇔ |N_ε(p)| ≥ minPts,
   *    N including the point itself);
-  *  - clusters are the existing alternating large/small-star CC closure
-  *    ([[Dedup.connectedComponentsStar]]) over CORE-CORE pairs only — the
-  *    vanishing-fraction pair graph, O(log diameter) rounds;
+  *  - clusters are connected components ([[Dedup.connectedComponents]])
+  *    over CORE-CORE pairs only — the vanishing-fraction pair graph,
+  *    O(log n) rounds;
   *  - border points (non-core within ε of a core) are assigned to their
   *    MINIMUM core-neighbor's cluster — the deterministic tie-break the
   *    original algorithm leaves order-dependent;
@@ -43,7 +43,7 @@ object Dbscan {
     val ccEdges = pairs
       .join(core.select(col("id").as("a_id")), Seq("a_id"), "left_semi")
       .join(core.select(col("id").as("b_id")), Seq("b_id"), "left_semi")
-    val ccLabels = Dedup.connectedComponentsStar(ccEdges, "a_id", "b_id")
+    val ccLabels = Dedup.connectedComponents(ccEdges, "a_id", "b_id")
       .select(col("v").as("id"), col("cluster"))
     // a core with no CORE neighbor anchors its own singleton cluster
     val coreLabels = core.join(ccLabels, Seq("id"), "left")

@@ -19,6 +19,9 @@ import graft.functions.VectorFunctions
   */
 object Dedup {
 
+  /** The id types the pair operators take, widest first. */
+  private val IntegralIds = Seq(LongType, IntegerType, ShortType, ByteType)
+
   /** Exact dedup: keep one survivor per key, latest by `orderCols` with a
     * deterministic tie-break. One hash-partitioned shuffle (row_number over
     * the key window); map-side nothing to combine since survivors are whole
@@ -155,8 +158,7 @@ object Dedup {
       cfg: MinHashConfig,
       blockCol: Option[String]): DataFrame = {
     val idType = docs.select(col(idCol)).schema.head.dataType
-    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
-      s"near-dup ids must be integral, got $idType")
+    require(IntegralIds.contains(idType), s"near-dup ids must be integral, got $idType")
     // (id, sh[, blk]); a doc with no shingles or a null block never pairs
     def shingled(src: DataFrame): DataFrame =
       src.select(Seq(col(idCol).as("id"), shExpr.as("sh")) ++ blockCol.map(col(_).as("blk")): _*)
@@ -524,169 +526,27 @@ object Dedup {
     * "A~B, B~C"; survivor selection needs "{A,B,C} is one cluster, keep
     * exactly one" — transitive closure, not pairs.
     *
-    * Iterative min-label propagation: each round every vertex takes the min
-    * of its own and its neighbors' labels (one keyed shuffle of the EDGE
-    * table per round), until a fixpoint. The graph here is only the dup
-    * pairs — a vanishing fraction of the corpus — and near-dup components
-    * are shallow (chains of transitive near-dups), so rounds ≈ component
-    * diameter stays small; the fixpoint check is one bounded count() per
-    * round. For adversarially deep graphs the published fix is alternating
-    * large/small-star pointer doubling (O(log D) rounds, same per-round
-    * shuffle shape) — the swap-in if a corpus ever produces long chains.
+    * Runs on the partition-resident fixpoint engine
+    * ([[Fixpoint.components]]): min-label steps with FastSV hooking and
+    * pointer jumping, O(log n) rounds even on a long chain whose ids are
+    * not ordered along it, one Spark job per round. `pairs` is evaluated
+    * once, and the loop fails loudly at `maxIter` rounds rather than
+    * return unconverged labels.
     *
-    * Returns (vertex, cluster) for every vertex that appears in `pairs`;
-    * cluster = min id of the component, so `vertex == cluster` marks the
-    * kept representative. */
+    * Returns (v, cluster) for every non-null endpoint in `pairs`, cluster =
+    * component min, so `v == cluster` marks the kept representative. A
+    * vertex that appears only in self-pairs labels itself; a pair with a
+    * NULL end adds nothing. Both columns keep the input id type (the wider
+    * of the two), which must be integral. */
   def connectedComponents(
-      pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 20): DataFrame = {
-    // materialize the pair pipeline ONCE before mirroring: the union below
-    // references `pairs` twice, and without this barrier the (potentially
-    // expensive — LSH) pair generation would execute once per branch
-    val p = pairs.select(col(aCol).as("src"), col(bCol).as("dst")).localCheckpoint(true)
-    val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist()
-    edges.count() // materialize before the loop
-    // each iteration MUST truncate lineage (localCheckpoint), not just
-    // persist: a persisted frame keeps its full logical plan, and the loop
-    // references `labels` three times per round — the analyzed tree grows
-    // exponentially and a 12-round chain OOMs the driver just STRINGIFYING
-    // the plan. With LogicalRDD-backed labels the per-round plan is flat.
-    var labels = edges.select(col("src").as("v")).distinct()
-      .withColumn("lab", col("v"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = edges.join(labels, edges("src") === labels("v"))
-        .groupBy(col("dst").as("u")).agg(min("lab").as("nlab"))
-      // chg is computed INLINE (nlab < old lab ⟺ the fold lowered the
-      // label) and counted by the fused materialize+count (r16) — the
-      // previous form re-joined next against labels and ran a second
-      // whole-frame job per round just to learn the changed count
-      val (next, _, nChg) = org.apache.spark.sql.graftshim.GraftBridge
-        .localCheckpointCount(
-          labels.join(nbrMin, labels("v") === col("u"), "left")
-            .select(col("v"),
-              least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab"),
-              coalesce(col("nlab") < col("lab"), lit(false)).as("chg")),
-          Some("chg"))
-      labels = next.select("v", "lab") // superseded blocks freed by the ContextCleaner
-      converged = nChg == 0
-      iter += 1
-    }
-    edges.unpersist(false)
-    // an unconverged result would be silently WRONG labels (a component
-    // wider than maxIter rounds) — fail loudly; the fix for such graphs is
-    // the alternating-star pointer-doubling variant, not a bigger maxIter
-    require(converged,
-      s"connected components did not converge in $maxIter rounds — " +
-        "component diameter exceeds the propagation budget; use " +
-        "connectedComponentsStar for deep graphs (O(log d) rounds)")
-    labels.select(col("v"), col("lab").as("cluster"))
-  }
-
-  /** Connected components by alternating large-star / small-star pointer
-    * doubling — O(log d) rounds in the component diameter d, vs the O(d)
-    * of [[connectedComponents]]'s min-label propagation. This is the
-    * adversarial-graph-safe default: a pathological template family
-    * producing a 1000-long chain of transitive near-dups finishes in ~10
-    * rounds here where propagation would need 1000 (and `require`-fails at
-    * its budget). Per round it costs two keyed aggregates + two joins over
-    * the EDGE table (still only the dup pairs, a vanishing fraction of the
-    * corpus) — roughly twice propagation's per-round shuffle work, bought
-    * back exponentially in round count.
-    *
-    * The two operations (after Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", where their convergence + correctness proofs
-    * live):
-    *  - large-star: every vertex u connects each STRICTLY LARGER neighbor
-    *    to the minimum of its closed neighborhood min(N(u) ∪ {u}).
-    *  - small-star: orient every edge large→small; every vertex u connects
-    *    its (now all smaller) neighbors and itself to their minimum.
-    * Both preserve connectivity; alternating them reaches a fixpoint where
-    * the edge set IS the star forest (u → component-min). Fixpoint is
-    * detected by an order-invariant set checksum (count + bit-XOR of
-    * xxhash64(u,v) — the edge sets are canonical-oriented and distinct),
-    * then VERIFIED structurally: one parent per child, no root that is
-    * itself a child — so a checksum collision cannot smuggle out wrong
-    * labels. Same localCheckpoint-per-round lineage truncation as the
-    * propagation loop (a persisted frame keeps its full logical plan; the
-    * analyzed tree otherwise grows exponentially with rounds).
-    *
-    * Returns (v, cluster) for every vertex in `pairs`, cluster = component
-    * min — same contract as [[connectedComponents]]. */
-  def connectedComponentsStar(
       pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 35): DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = und.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      und.join(mins, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val oriented = e.select(
-        greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      val mins = oriented.groupBy("u").agg(min("v").as("m"))
-      oriented.join(mins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mins.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v"))
-        .distinct()
-    }
-    // the (count, bit-XOR of xxhash64(u,v)) set checksum rides the
-    // materialization job itself (r16, GraftBridge.localCheckpointXor) —
-    // the previous form ran a second whole-frame aggregate per round
-    def checkpointWithChecksum(e: DataFrame): (DataFrame, (Long, Long)) = {
-      val (f, n, x) = org.apache.spark.sql.graftshim.GraftBridge
-        .localCheckpointXor(
-          e.withColumn("h", xxhash64(col("u"), col("v"))), "h")
-      (f.select("u", "v"), (n, x))
-    }
-    val (edges0, cs0) = checkpointWithChecksum(
-      pairs.where(col(aCol) =!= col(bCol))
-        .select(greatest(col(aCol), col(bCol)).as("u"),
-          least(col(aCol), col(bCol)).as("v"))
-        .distinct())
-    var edges = edges0
-    // vertices appearing ONLY in degenerate self-pairs keep their own label
-    // (the mirror of propagation's behavior); a vertex with BOTH a self-pair
-    // and real edges gets its label from the star forest alone — emitting
-    // both would produce two labels for one vertex (caught by the
-    // union-find property spec)
-    val realVerts = edges.select(col("u").as("v"))
-      .union(edges.select(col("v"))).distinct()
-    val selfLabels = pairs.where(col(aCol) === col(bCol))
-      .select(col(aCol).as("v"), col(aCol).as("cluster")).distinct()
-      .join(realVerts, Seq("v"), "left_anti")
-    var cs = cs0
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val (next, nextCs) = checkpointWithChecksum(smallStar(largeStar(edges)))
-      converged = nextCs == cs
-      edges = next
-      cs = nextCs
-      iter += 1
-    }
-    require(converged,
-      s"star CC did not converge in $maxIter rounds — at O(log d) rounds " +
-        "this means a graph far beyond any real dup component; investigate")
-    // structural verification of star-ness (checksum-collision guard):
-    // every child has exactly one parent, and no parent is also a child
-    val badParents = edges.groupBy("u").agg(countDistinct("v").as("nv"))
-      .where(col("nv") > 1).count()
-    require(badParents == 0L, s"star CC fixpoint is not a forest: $badParents vertices with >1 parent")
-    val rootAsChild = edges.select(col("v")).intersect(edges.select(col("u"))).count()
-    require(rootAsChild == 0L, s"star CC fixpoint has $rootAsChild non-root parents")
-    edges.select(col("u").as("v"), col("v").as("cluster"))
-      .union(edges.select(col("v").as("v"), col("v").as("cluster")))
-      .union(selfLabels)
-      .distinct()
+    val ends = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+    val types = ends.schema.map(_.dataType)
+    require(types.forall(IntegralIds.contains), s"component ids must be integral, got $types")
+    val idType = IntegralIds.find(types.contains).get
+    Fixpoint.components(ends.select(col("a").cast(LongType), col("b").cast(LongType)), maxIter,
+        s"connected components did not converge in $maxIter rounds")
+      .select(col("v").cast(idType).as("v"), col("cluster").cast(idType).as("cluster"))
   }
 
   /** Cross-document duplicated chunks: every chunk fingerprint seen in more

@@ -71,7 +71,7 @@ object Scc {
     // returns the counts from the materialization job itself. Neither
     // form keeps a layout built before the checkpoint: under AQE the
     // checkpointed frame reports no partitioning.
-    val (rem0, remCount0, _) =
+    val (rem0, remCount0) =
       GraftBridge.localCheckpointCount(nodes.select(col("node")).distinct())
     var remaining = rem0
     var remainingCount = remCount0
@@ -137,7 +137,7 @@ object Scc {
         val p1 = peelable(degrees)
         val d1 = applyPeel(degrees, p1)
         val p2 = peelable(d1)
-        val (d2, c, _) = GraftBridge.localCheckpointCount(applyPeel(d1, p2))
+        val (d2, c) = GraftBridge.localCheckpointCount(applyPeel(d1, p2))
         degrees = d2
         shrunk = c != degCount
         degCount = c
@@ -183,7 +183,7 @@ object Scc {
           esIntra, Fixpoint.Max, 0L, maxIters,
           s"backward mark did not converge in $maxIters rounds")
         done += marked.select(col("node"), col("color").as("pivot"))
-        val (rem2, remC, _) = GraftBridge.localCheckpointCount(
+        val (rem2, remC) = GraftBridge.localCheckpointCount(
           remaining.join(marked.select("node"), Seq("node"), "left_anti"))
         remaining = rem2
         remainingCount = remC

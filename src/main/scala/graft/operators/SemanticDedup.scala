@@ -96,13 +96,13 @@ object SemanticDedup {
       threshold: Double,
       targetCellSize: Int = 1024,
       nprobe: Int = 2): DataFrame = {
-    val pairs = nearDupPairs(corpus, idCol, vecCol, threshold,
-      targetCellSize, nprobe).localCheckpoint(true)
-    decisionsFromPairs(corpus, idCol, pairs)
+    decisionsFromPairs(corpus, idCol,
+      nearDupPairs(corpus, idCol, vecCol, threshold, targetCellSize, nprobe))
   }
 
-  /** Decisions from an already-materialized pair table (lets callers share
-    * the pair scan with their own verification lanes). */
+  /** Decisions from a pair table (lets callers share the pair scan with
+    * their own verification lanes). The closure is
+    * [[Dedup.connectedComponents]], which evaluates `pairs` once. */
   def decisionsFromPairs(corpus: DataFrame, idCol: String, pairs: DataFrame)
       : DataFrame = {
     val labels = Dedup.connectedComponents(pairs, "id_a", "id_b")

@@ -7,12 +7,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Bfs, DagLevels}
+import graft.operators.{Bfs, DagLevels, Dedup}
 
-/** Structural guard on the delta-fold fixpoint: on a chain of L nodes
-  * (H = L - 1 hops) Bfs.distances from the head and DagLevels.levels both
-  * converge in exactly H / 2 + 1 double-stepped rounds, and each round is
-  * ONE Spark job on top of a set-up that does not grow with the chain. */
+/** Structural guards on the partition-resident fixpoints: on a chain of L
+  * nodes (H = L - 1 hops) Bfs.distances from the head and DagLevels.levels
+  * both converge in exactly H / 2 + 1 double-stepped rounds, connected
+  * components in at most 2 * ceil(log2 L) rounds whatever the order of the
+  * ids along the chain, and each round is ONE Spark job on top of a set-up
+  * that does not grow with the chain. */
 class FixpointRoundsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -55,6 +57,29 @@ class FixpointRoundsSpec extends AnyFunSuite {
       // set-up and the result's collect: a fixed number of jobs
       assert(setup.distinct.size === 1, s"$name: jobs beyond one per round $setup")
       assert(setup.head <= 3, s"$name: set-up jobs ${setup.head}")
+    }
+  }
+
+  test("connected components of an ordered or permuted chain take O(log L) rounds, one job per round") {
+    import TestSpark.spark.implicits._
+    val rnd = new scala.util.Random(20200L)
+    for (len <- Seq(30, 1000); shuffled <- Seq(false, true, true)) {
+      val ids = if (shuffled) rnd.shuffle((0L until len).toVector) else (0L until len).toVector
+      val pairs = ids.zip(ids.tail).toDF("a", "b")
+      def run(maxIter: Int): Map[Long, Long] =
+        Dedup.connectedComponents(pairs, "a", "b", maxIter)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val bound = 2 * (32 - Integer.numberOfLeadingZeros(len - 1)) // 2 * ceil(log2 L)
+      // the guard fails when the last needed round reaches maxIter
+      val (got, n) = jobs(run(bound + 1))
+      assert(got === ids.map(_ -> 0L).toMap, s"L = $len")
+      // set-up and the result's collect are two jobs, every round one: the
+      // guard trips at exactly the rounds counted that way
+      val rounds = n - 2
+      val what = s"L = $len, shuffled = $shuffled, $n jobs"
+      assert(rounds >= 1 && rounds <= bound, what)
+      intercept[IllegalArgumentException](run(rounds))
+      if (rounds < bound) assert(run(rounds + 1) === got, what)
     }
   }
 }
