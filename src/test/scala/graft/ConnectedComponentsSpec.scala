@@ -78,15 +78,19 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(cc((3L, 3L), (3L, 2L), (4L, 4L)) === Map(2L -> 2L, 3L -> 2L, 4L -> 4L))
   }
 
-  test("star CC matches a union-find reference over 20 random graphs") {
-    val named = Seq(
+  test("star CC matches propagation on chains, cycles, and stars") {
+    // min-label propagation gives every vertex its component's min id,
+    // which is what the union-find reference computes
+    val cases = Seq(
       Seq((2L, 5L), (5L, 9L), (20L, 30L)),
       Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (10L, 12L), (10L, 13L)),
       Seq((9L, 1L), (1L, 5L)),
-      Seq((7L, 7L), (1L, 2L)),
-      (0L until 12L).map(i => (100L + i, 101L + i)),
-      chain1000,
-      permuted1000)
+      (0L until 12L).map(i => (100L + i, 101L + i)))
+    for (ps <- cases) assert(cc(ps: _*) === reference(ps), s"pairs=$ps")
+  }
+
+  test("star CC matches a union-find reference over 20 random graphs") {
+    val named = Seq(Seq((7L, 7L), (1L, 2L)), chain1000, permuted1000)
     val rnd = new scala.util.Random(8204L)
     val random = Seq.fill(20) {
       val n = 2 + rnd.nextInt(30)
